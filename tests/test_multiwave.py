@@ -94,6 +94,31 @@ def _table_state(job, table, cols):
     return sorted(tuple(r[c] for c in cols) for r in job.store.read(table).collect())
 
 
+# the columns of every committed table that sequential and concurrent
+# crawls must agree on
+_EQUAL_COLS = {
+    "frontier": (
+        "crawl_id", "depth", "lane", "do_index", "batch_no", "batch_pos",
+        "url", "url_id", "host", "fetch_slot", "not_before_ms", "lineage",
+    ),
+    "url_seen": ("crawl_id", "url_id", "first_depth"),
+    "crawl_status": (
+        "crawl_id", "user_id", "url_id", "url", "status", "comment_class",
+        "depth", "start_url", "start_ssld",
+    ),
+    "crawl_metrics": (
+        "crawl_id", "depth", "extracted", "parsed_ok", "deduped_session",
+        "deduped_persistent", "rejected_filter", "rejected_blacklist",
+        "rejected_robots", "accepted", "do_index",
+    ),
+}
+
+
+def _assert_same_state(seq, con):
+    for table, cols in _EQUAL_COLS.items():
+        assert _table_state(seq, table, cols) == _table_state(con, table, cols), table
+
+
 def test_concurrent_tiers_equal_sequential(spark, two_corpora, tmp_path_factory):
     a, b, docs_df, robots_df, rules = two_corpora
     seeds_depths = [(a.seeds[0], 2), (b.seeds[0], 3)]
@@ -106,33 +131,68 @@ def test_concurrent_tiers_equal_sequential(spark, two_corpora, tmp_path_factory)
         rules, seeds_depths, concurrent=True,
     )
     assert seq_ids == con_ids  # deterministic crawl ids
+    _assert_same_state(seq, con)
 
-    frontier_cols = (
-        "crawl_id", "depth", "lane", "do_index", "batch_no", "batch_pos",
-        "url", "url_id", "host", "fetch_slot", "not_before_ms", "lineage",
+
+def test_mixed_depth_tier_equals_sequential(spark, two_corpora, tmp_path_factory):
+    """A tier whose candidate frame holds seed rows of one crawl and
+    expanded rows of another: crawl A runs its depth-0 tier alone,
+    crawl B starts, then A (depth 1) and B (depth 0) share a tier.
+    The committed state must equal sequential BFS."""
+    a, b, docs_df, robots_df, rules = two_corpora
+    con = CrawlJob(spark, str(tmp_path_factory.mktemp("mixed")), docs_df,
+                   blacklist=rules, robots=robots_df, n_shards=8)
+    (cid_a,) = con.start(a.seeds[0], {"crawlingDepth": 1})
+    assert con.step_all([cid_a]) == [cid_a]
+    (cid_b,) = con.start(b.seeds[0], {"crawlingDepth": 1})
+    next_depth = con.store.manifest()["meta"]["next_depth"]
+    assert (next_depth[cid_a], next_depth[cid_b]) == (1, 0)
+    con.run_concurrent([cid_a, cid_b])
+    seq, seq_ids = _crawl(
+        spark, str(tmp_path_factory.mktemp("mixed_seq")), docs_df, robots_df,
+        rules, [(a.seeds[0], 1), (b.seeds[0], 1)], concurrent=False,
     )
-    assert _table_state(seq, "frontier", frontier_cols) == _table_state(
-        con, "frontier", frontier_cols
-    )
-    seen_cols = ("crawl_id", "url_id", "first_depth")
-    assert _table_state(seq, "url_seen", seen_cols) == _table_state(
-        con, "url_seen", seen_cols
-    )
-    status_cols = (
-        "crawl_id", "user_id", "url_id", "url", "status", "comment_class",
-        "depth", "start_url", "start_ssld",
-    )
-    assert _table_state(seq, "crawl_status", status_cols) == _table_state(
-        con, "crawl_status", status_cols
-    )
-    metrics_cols = (
-        "crawl_id", "depth", "extracted", "parsed_ok", "deduped_session",
-        "deduped_persistent", "rejected_filter", "rejected_blacklist",
-        "rejected_robots", "accepted", "do_index",
-    )
-    assert _table_state(seq, "crawl_metrics", metrics_cols) == _table_state(
-        con, "crawl_metrics", metrics_cols
-    )
+    assert seq_ids == [cid_a, cid_b]
+    _assert_same_state(seq, con)
+
+
+def test_step_all_read_budget(spark, two_corpora, tmp_path_factory, monkeypatch):
+    """One step_all reads the frontier ONCE whatever the number of
+    crawls in the tier, and reading a committed table starts no Spark
+    job (the declared schema replaces parquet footer inference)."""
+    from yacy_grid_crawler_spark.sources.statestore import SCHEMAS, StateStore
+
+    a, b, docs_df, robots_df, rules = two_corpora
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("budget")), docs_df,
+                   blacklist=rules, robots=robots_df, n_shards=8)
+    cids = job.start(a.seeds[0], {"crawlingDepth": 2})
+    cids += job.start(b.seeds[0], {"crawlingDepth": 2})
+    assert job.step_all(cids) == cids  # depth-0 tier: seed rows only
+
+    reads = []
+    real_read = StateStore.read
+
+    def counting_read(self, table, version=None):
+        reads.append(table)
+        return real_read(self, table, version)
+
+    monkeypatch.setattr(StateStore, "read", counting_read)
+    for active in (cids[:1], cids):  # N = 1, then N = 2 expanding crawls
+        reads.clear()
+        job.step_all(active)
+        assert reads.count("frontier") == 1, (len(active), reads)
+    monkeypatch.undo()
+
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert set(job.store.manifest()["tables"]) == set(SCHEMAS)
+    for table in SCHEMAS:
+        job.store.read(table)
+    assert set(tracker.getJobIdsForGroup()) == before
+    spark.range(1).count()  # the probe does see jobs
+    assert set(tracker.getJobIdsForGroup()) != before
 
 
 def test_concurrent_indexer_blacklist_equals_sequential(

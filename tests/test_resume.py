@@ -2,6 +2,8 @@
 commits, restart from the snapshot, assert identical final state —
 the north-rule 'exact resume from checkpoint'."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -438,3 +440,57 @@ def test_register_views_sql_surface(spark, tmp_path):
     assert set(names) == {f"vv_{t}" for t in SCHEMAS}
     assert spark.sql("SELECT count(*) AS n FROM vv_crawl_status").collect()[0]["n"] == 0
     assert spark.sql("SELECT count(*) AS n FROM vv_frontier").collect()[0]["n"] == 0
+
+
+def test_append_rejects_schema_drift(spark, tmp_path):
+    """Reads apply SCHEMAS instead of inferring it from the files, so
+    a frame that drifts from SCHEMAS must fail at its own append (no
+    data dir written), naming the table and the column."""
+    from pyspark.sql import types as T
+
+    from yacy_grid_crawler_spark.sources.statestore import SCHEMAS, StateStore
+
+    store = StateStore(spark, str(tmp_path / "st"))
+    # host_slots.n is declared bigint; an int column must be refused
+    drifted = spark.createDataFrame(
+        [("c1", "h1", 3)],
+        T.StructType([
+            T.StructField("crawl_id", T.StringType()),
+            T.StructField("host", T.StringType()),
+            T.StructField("n", T.IntegerType()),
+        ]),
+    )
+    pc = store.begin()
+    with pytest.raises(ValueError, match=r"'host_slots'.*'n'.*int.*bigint"):
+        pc.append("host_slots", drifted)
+    with pytest.raises(ValueError, match=r"'host_slots'.*'n'"):
+        pc.replace("host_slots", drifted)
+    with pytest.raises(ValueError, match=r"'url_seen'.*'seen_at_ms'"):
+        pc.append(
+            "url_seen",
+            spark.createDataFrame([], SCHEMAS["url_seen"]).drop("seen_at_ms"),
+        )
+    assert not os.path.exists(os.path.join(store.root, "host_slots"))
+    # a conforming frame still commits and reads back
+    pc.append(
+        "host_slots", spark.createDataFrame([("c1", "h1", 3)], SCHEMAS["host_slots"])
+    )
+    pc.finalize()
+    assert [tuple(r) for r in store.read("host_slots").collect()] == [("c1", "h1", 3)]
+
+
+def test_fresh_store_start_writes_no_status_commit(
+    spark, corpus, docs_df, robots_df, tmp_path
+):
+    """S8 has nothing to delete on a store without crawl_status
+    commits: start() then commits crawl_starts only, with no empty
+    crawl_status commit dir."""
+    root = str(tmp_path / "st")
+    job = CrawlJob(spark, root, docs_df, robots=robots_df, n_shards=4)
+    cids = job.start(corpus.seeds[0], {"crawlingDepth": 1})
+    assert cids
+    tables = job.store.manifest()["tables"]
+    assert "crawl_status" not in tables
+    assert tables["crawl_starts"] == [1]
+    assert not os.path.exists(os.path.join(root, "crawl_status"))
+    assert job.store.read("crawl_status").count() == 0

@@ -60,30 +60,27 @@ def _pack_order(order: tuple[str, ...]):
     (e.g. a >=2^18-span document) would silently bleed into the
     neighboring field and crown the wrong first-occurrence winner, so
     out-of-range raises loudly instead (two codegen compares per
-    field — noise next to the md5/shuffle cost of the same rows)."""
+    field — noise next to the md5/shuffle cost of the same rows).
+
+    Built as ONE parsed SQL expression: the equivalent Column-builder
+    chain costs dozens of py4j round trips on every plan build."""
     total = sum(_PACK_WIDTHS[c] for c in order)
-    expr = None
+    terms = []
     shift = total
     for c in order:
         shift -= _PACK_WIDTHS[c]
         lim = 1 << _PACK_WIDTHS[c]
-        src = F.col(c).cast("long")
-        term = F.when((src >= 0) & (src < lim), src).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"packed-order overflow: {c}="),
-                    # NULL order values also land here (the range test is
-                    # null); coalesce so the error names the column
-                    # instead of raise_error(NULL)'s opaque message
-                    F.coalesce(F.col(c).cast("string"), F.lit("NULL")),
-                    F.lit(f" outside [0, {lim})"),
-                )
-            )
+        src = f"CAST(`{c}` AS BIGINT)"
+        # NULL order values also land in the ELSE branch (the range
+        # test is null); coalesce so the error names the column
+        # instead of raise_error(NULL)'s opaque message
+        term = (
+            f"CASE WHEN {src} >= 0 AND {src} < {lim} THEN {src} "
+            f"ELSE raise_error(concat('packed-order overflow: {c}=', "
+            f"coalesce(CAST(`{c}` AS STRING), 'NULL'), ' outside [0, {lim})')) END"
         )
-        if shift:
-            term = term * F.lit(1 << shift)
-        expr = term if expr is None else expr + term
-    return expr
+        terms.append(f"({term}) * {1 << shift}" if shift else f"({term})")
+    return F.expr(" + ".join(terms))
 
 
 def _unpack_order(pk, order: tuple[str, ...]) -> dict:

@@ -55,8 +55,12 @@ def content_domain_jvm(url_col: Column) -> Column:
     # slower when inlined into the wave's F1 filter).
     seg = F.substring_index(F.substring_index(url_col, "?", 1), "/", -1)
     ext = F.lower(F.substring_index(seg, ".", -1))
-    dom_map = F.create_map(
-        *[F.lit(x) for k in sorted(_EXT_DOMAIN) for x in (k, _EXT_DOMAIN[k])]
+    # one parsed map literal: a create_map of F.lit pairs costs one
+    # py4j round trip per entry on every plan build
+    dom_map = F.expr(
+        "map("
+        + ", ".join(f"'{k}', '{_EXT_DOMAIN[k]}'" for k in sorted(_EXT_DOMAIN))
+        + ")"
     )
     valid = (F.instr(seg, ".") > 0) & ext.rlike("^[a-z0-9]{1,5}$")
     return F.when(url_col.isNull(), F.lit(None).cast("string")).otherwise(

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..config import build_crawl_start, make_profile
 from ..operators.blacklist import BlacklistRule
 from ..operators.seeds import split_seeds
-from ..sources.statestore import StateStore
+from ..sources.statestore import SCHEMAS, StateStore
 from .wave import run_wave
 
 
@@ -174,20 +174,37 @@ class CrawlJob:
             "crawl_id string, user_id string, mustmatch string, collection string, "
             "start_url string, start_ssld string, profile_json string",
         )
-        # S8 — delete conflicting old status entries so the D3
-        # exist-check does not block the re-crawl
-        # (CrawlStartService.java:141-173). Three delete rules:
-        #   1. ALWAYS: the start URL's own entry by _id = md5(url)
-        #      (:143-147)
-        #   2. mustmatch=='.*': prior crawl_ids for the same start_url
-        #      from the crawlstart index (limit 100 per url, :153-160),
-        #      plus all entries with the same start_url / start_ssld
-        #      (:162-166)
-        #   3. else: entries whose crawl used the EXACT same mustmatch
-        #      (:167-171) — the crawler doc's mustmatch_s equals its
-        #      crawl_start's mustmatch, so this is a semi-join on
-        #      crawl_id through the (tiny, broadcastable) crawl_starts
-        #      dimension.
+        # S8 — delete conflicting old status entries (see
+        # _s8_surviving_status); a store with no crawl_status commits
+        # has nothing to delete, so it gets no empty replace commit
+        replaces = {}
+        if self.store.manifest()["tables"].get("crawl_status"):
+            replaces["crawl_status"] = self._s8_surviving_status(
+                profile, start_rows
+            )
+        self.store.commit(
+            appends={"crawl_starts": starts},
+            replaces=replaces,
+            meta=self._meta({cid: 0 for cid in new_ids}),
+        )
+        return new_ids
+
+    def _s8_surviving_status(self, profile: dict, start_rows: list) -> DataFrame:
+        """S8 — the crawl_status rows a crawl start keeps: conflicting
+        old entries are deleted so the D3 exist-check does not block
+        the re-crawl (CrawlStartService.java:141-173). Three delete
+        rules:
+          1. ALWAYS: the start URL's own entry by _id = md5(url)
+             (:143-147)
+          2. mustmatch=='.*': prior crawl_ids for the same start_url
+             from the crawlstart index (limit 100 per url, :153-160),
+             plus all entries with the same start_url / start_ssld
+             (:162-166)
+          3. else: entries whose crawl used the EXACT same mustmatch
+             (:167-171) — the crawler doc's mustmatch_s equals its
+             crawl_start's mustmatch, so this is a semi-join on
+             crawl_id through the (tiny, broadcastable) crawl_starts
+             dimension."""
         from ..functions.urlnorm import url_id as _url_id
 
         status = self.store.read("crawl_status")
@@ -215,24 +232,13 @@ class CrawlJob:
                 F.col("start_url").isin(start_urls)
                 | F.col("start_ssld").isin(sslds)
             )
-            replaced = status.filter(keep)
-        else:
-            same_mm = (
-                starts_tbl.filter(
-                    F.col("mustmatch") == profile.get("mustmatch")
-                )
-                .select("crawl_id")
-                .distinct()
-            )
-            replaced = status.filter(keep).join(
-                same_mm, "crawl_id", "left_anti"
-            )
-        self.store.commit(
-            appends={"crawl_starts": starts},
-            replaces={"crawl_status": replaced},
-            meta=self._meta({cid: 0 for cid in new_ids}),
+            return status.filter(keep)
+        same_mm = (
+            starts_tbl.filter(F.col("mustmatch") == profile.get("mustmatch"))
+            .select("crawl_id")
+            .distinct()
         )
-        return new_ids
+        return status.filter(keep).join(same_mm, "crawl_id", "left_anti")
 
     # ------------------------------------------------------------------
     def _meta(self, next_depths: dict[str, int]) -> dict:
@@ -332,53 +338,73 @@ class CrawlJob:
         meta.setdefault("seen_filters", {})[cid] = entry
         self._seen_filters[cid] = [bloom, n, cap]
 
-    def _seed_candidates(self, cid: str) -> DataFrame:
-        """S2 — the rootasset graph: one canonical link = the start
-        URL (CrawlStartService.java:186-191)."""
-        p = self.profiles[cid]
-        return self.spark.createDataFrame(
-            [(0, 0, 0, 0, p["start_url"])],
-            "parent_ini int, parent_batch_no long, parent_batch_pos int, "
-            "span_offset int, url_raw string",
-        )
+    def _candidates(self, depths: dict[str, int]) -> DataFrame:
+        """Candidate links of one tier, each crawl at its own depth
+        ({crawl_id: depth}): rows of (crawl_id, depth, parent_ini,
+        parent_batch_no, parent_batch_pos, span_offset, url_raw).
 
-    def _expand_candidates(self, cid: str, depth: int) -> DataFrame:
-        """Links of documents fetched for frontier rows at depth-1, in
-        canonical parent order (SURVEY.md §5 crawl-order spec)."""
-        parents = (
-            self.store.read("frontier")
-            .filter((F.col("crawl_id") == cid) & (F.col("depth") == depth - 1))
-            .select(
+        Depth 0 is S2 — the rootasset graph: one canonical link = the
+        start URL (CrawlStartService.java:186-191). Depth d > 0 is the
+        links of documents fetched for the crawl's frontier rows at
+        d-1, in canonical parent order (SURVEY.md §5 crawl-order
+        spec). However many crawls the tier holds, the seed rows are
+        one local frame and the expansions one frontier scan (a
+        pushed-down (depth, crawl_id) predicate) plus one docs join."""
+        seeds = [
+            (cid, 0, 0, 0, 0, 0, self.profiles[cid]["start_url"])
+            for cid, d in depths.items() if d == 0
+        ]
+        by_parent_depth: dict[int, list[str]] = {}
+        for cid, d in depths.items():
+            if d > 0:
+                by_parent_depth.setdefault(d - 1, []).append(cid)
+        parts = []
+        if seeds:
+            parts.append(self.spark.createDataFrame(
+                seeds,
+                "crawl_id string, depth int, parent_ini int, "
+                "parent_batch_no long, parent_batch_pos int, "
+                "span_offset int, url_raw string",
+            ))
+        if by_parent_depth:
+            wanted = None
+            for d, cids in sorted(by_parent_depth.items()):
+                cond = (F.col("depth") == d) & F.col("crawl_id").isin(sorted(cids))
+                wanted = cond if wanted is None else wanted | cond
+            parents = self.store.read("frontier").filter(wanted).select(
+                "crawl_id",
+                (F.col("depth") + 1).alias("depth"),
                 F.col("url").alias("doc_id"),
                 (1 - F.col("do_index").cast("int")).alias("parent_ini"),
                 F.col("batch_no").alias("parent_batch_no"),
                 F.col("batch_pos").alias("parent_batch_pos"),
             )
-        )
-        docs = self.docs.join(parents, "doc_id", "inner")
-        # same projection as operators.extract.extract_links, but
-        # carrying the composite parent-order columns instead of a
-        # single dense ordinal (no global window needed):
-        exploded = (
-            docs.select(
-                "parent_ini",
-                "parent_batch_no",
+            order_cols = (
+                "crawl_id", "depth", "parent_ini", "parent_batch_no",
                 "parent_batch_pos",
-                F.explode("spans").alias("span"),
             )
-            .filter(
-                F.col("span.kind").isin("canonical", "inbound", "outbound", "frame", "iframe")
-                & F.col("span.text").isNotNull()
+            # same projection as operators.extract.extract_links, but
+            # carrying the composite parent-order columns instead of a
+            # single dense ordinal (no global window needed):
+            parts.append(
+                self.docs.join(parents, "doc_id", "inner")
+                .select(*order_cols, F.explode("spans").alias("span"))
+                .filter(
+                    F.col("span.kind").isin(
+                        "canonical", "inbound", "outbound", "frame", "iframe"
+                    )
+                    & F.col("span.text").isNotNull()
+                )
+                .select(
+                    *order_cols,
+                    F.col("span.offset").alias("span_offset"),
+                    F.col("span.text").alias("url_raw"),
+                )
             )
-            .select(
-                "parent_ini",
-                "parent_batch_no",
-                "parent_batch_pos",
-                F.col("span.offset").alias("span_offset"),
-                F.col("span.text").alias("url_raw"),
-            )
-        )
-        return exploded
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
     # ------------------------------------------------------------------
     def _base_slots(self, cid: str | None = None):
@@ -581,9 +607,7 @@ class CrawlJob:
         max_depth = int(profile.get("crawlingDepth", 3))
         if depth > max_depth:  # F5 depth gate (CrawlerListener.java:215-224)
             return False
-        candidates = (
-            self._seed_candidates(cid) if depth == 0 else self._expand_candidates(cid, depth)
-        )
+        candidates = self._candidates({cid: depth}).drop("crawl_id", "depth")
         if depth > 0 and candidates.isEmpty():
             return False
         cap = max_wave_urls if max_wave_urls is not None else self.max_wave_urls
@@ -833,39 +857,28 @@ class CrawlJob:
     # ------------------------------------------------------------------
     def step_all(self, crawl_ids: list[str]) -> list[str]:
         """Run ONE tier for every active crawl as a single combined
-        wave (plans/multiwave.py): candidates from all crawls union
-        into one job, profile regexes ride as broadcast columns.
-        Returns the crawl ids still active after the tier."""
+        wave (plans/multiwave.py): the candidates of all crawls come
+        from one builder call (one frontier scan and one docs join for
+        the whole tier), profile regexes ride as broadcast columns, and
+        the per-crawl metrics are one grouped job whose collected rows
+        also give the continue decision and the novel counts. Returns
+        the crawl ids still active after the tier."""
         from .multiwave import profiles_to_df, run_wave_multi
 
         meta = self.store.manifest().get("meta", {})
         nd = meta.get("next_depth", {})
-        parts = []
-        stepped: list[str] = []
-        for cid in crawl_ids:
-            depth = int(nd.get(cid, 0))
-            if depth > int(self.profiles[cid].get("crawlingDepth", 3)):
-                continue
-            cand = (
-                self._seed_candidates(cid) if depth == 0
-                else self._expand_candidates(cid, depth)
-            )
-            parts.append(
-                cand.withColumn("crawl_id", F.lit(cid)).withColumn(
-                    "depth", F.lit(depth)
-                )
-            )
-            stepped.append(cid)
-        if not parts:
+        depths = {
+            cid: int(nd.get(cid, 0)) for cid in crawl_ids
+            if int(nd.get(cid, 0)) <= int(self.profiles[cid].get("crawlingDepth", 3))
+        }
+        if not depths:
             return []
-        candidates = parts[0]
-        for p in parts[1:]:
-            candidates = candidates.unionByName(p)
+        stepped = list(depths)
         profiles = profiles_to_df(self.spark, {c: self.profiles[c] for c in stepped})
         seen, status_ids = self._seen_inputs()
         wave_start_ms = self._wave_start_ms()
         res = run_wave_multi(
-            candidates, profiles, seen=seen, status_ids=status_ids,
+            self._candidates(depths), profiles, seen=seen, status_ids=status_ids,
             blacklist=self.blacklist, robots=self.robots,
             n_shards=self.n_shards, use_bloom=self.use_bloom,
             distributed_rank=self._rank_mode(
@@ -886,26 +899,25 @@ class CrawlJob:
                 F.count(F.lit(1)).alias("n")
             ),
         )
-        metrics = res.metrics_df()
-        pc.append("crawl_metrics", metrics)
-        meta2 = self._meta({cid: int(nd.get(cid, 0)) + 1 for cid in stepped})
+        metrics_schema = SCHEMAS["crawl_metrics"]
+        rows = res.metrics_rows()
+        pc.append("crawl_metrics", self.spark.createDataFrame(rows, metrics_schema))
+        meta2 = self._meta({cid: depths[cid] + 1 for cid in stepped})
         for cid in stepped:
             meta2.setdefault("wave_starts", {})[cid] = wave_start_ms
-        # one collect serves both the continue-decision and (with
+        # the same rows serve the continue decision and (with
         # checkpoint filters on) the per-crawl novel counts: every
         # novel row — accepted or rejected — is a url_seen delta row
-        stats = {
-            r["crawl_id"]: r
-            for r in metrics.groupBy("crawl_id").agg(
-                F.sum("accepted").alias("accepted"),
-                (
-                    F.sum("accepted") + F.sum("deduped_persistent")
-                    + F.sum("rejected_filter") + F.sum("rejected_blacklist")
-                    + F.sum("rejected_robots")
-                ).alias("novel"),
-            ).collect()
-        }
-        accepted = {c: int(r["accepted"]) for c, r in stats.items()}
+        accepted: dict[str, int] = {}
+        novel: dict[str, int] = {}
+        for r in rows:
+            m = dict(zip(metrics_schema.names, r))
+            cid = m["crawl_id"]
+            accepted[cid] = accepted.get(cid, 0) + m["accepted"]
+            novel[cid] = novel.get(cid, 0) + (
+                m["accepted"] + m["deduped_persistent"] + m["rejected_filter"]
+                + m["rejected_blacklist"] + m["rejected_robots"]
+            )
         if self.checkpoint_filters:
             # keep the stored blooms covering EVERY committed url_seen
             # row: a multiwave tier that skipped this would leave a
@@ -917,7 +929,7 @@ class CrawlJob:
                     pc.version,
                     meta2,
                     res.seen.filter(F.col("crawl_id") == cid),
-                    int(stats[cid]["novel"]) if cid in stats else 0,
+                    novel.get(cid, 0),
                 )
         pc.finalize(meta=meta2)
         self._mirror_append(pc.version, res.seen, res.status)
@@ -927,7 +939,7 @@ class CrawlJob:
         return [
             cid for cid in stepped
             if accepted.get(cid, 0) > 0
-            and int(nd.get(cid, 0)) < int(self.profiles[cid].get("crawlingDepth", 3))
+            and depths[cid] < int(self.profiles[cid].get("crawlingDepth", 3))
         ]
 
     def run_concurrent(self, crawl_ids: list[str] | None = None) -> None:

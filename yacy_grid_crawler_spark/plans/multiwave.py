@@ -16,9 +16,14 @@ What changes vs plans/wave.py:
     JVM-side, still whole-stage codegen; no new Python kernels.
   * `depth` rides as a candidate column (crawls may sit at different
     depths in the same tier).
-  * per-crawl metrics come from three tiny grouped aggregates over the
-    wave's cached stages (amortized across all crawls in the tier)
-    instead of global observe() counters.
+  * per-crawl metrics come from ONE grouped aggregate over the
+    wave's cached stages (a union of three narrow 0/1 counter
+    projections, summed by crawl and depth and collected once) instead
+    of global observe() counters; the driver derives both the
+    crawl_metrics rows and the continue decision from those rows.
+  * the caller (CrawlJob.step_all) builds the candidates of every
+    crawl in the tier with one frontier scan and one docs join,
+    whatever the number of crawls.
 
 Concurrency semantics (documented contract): the persistent
 exist-check (D3) sees the crawl_status SNAPSHOT taken at tier start —
@@ -86,6 +91,13 @@ def profiles_to_df(spark: SparkSession, profiles: dict[str, dict]) -> DataFrame:
     return spark.createDataFrame(rows, PROFILE_SCHEMA)
 
 
+# per-(crawl, depth) counters summed by MultiWaveResult.metrics_rows
+_COUNTERS = (
+    "extracted", "parsed_ok", "after_f1", "passed", "filter", "blacklist",
+    "robots", "kept", "kept_idx",
+)
+
+
 @dataclass
 class MultiWaveResult:
     frontier: DataFrame
@@ -94,53 +106,60 @@ class MultiWaveResult:
     cached: list = field(default_factory=list)
     _stages: dict = field(default_factory=dict)
 
-    def metrics_df(self) -> DataFrame:
-        """Per-(crawl, depth) metrics from the cached wave stages.
-        Call after a sink write materialized the wave (three tiny
-        grouped jobs over cached data, amortized across all crawls in
-        the tier)."""
+    def metrics_rows(self) -> list[tuple]:
+        """Per-(crawl, depth) metrics rows in SCHEMAS["crawl_metrics"]
+        column order, from the cached wave stages. Call after a sink
+        write materialized the wave. ONE Spark job for the whole tier:
+        a narrow 0/1 counter projection of each stage (parsed
+        candidates, flagged novel rows, kept rows), unioned and summed
+        by (crawl_id, depth); everything else is driver arithmetic on
+        the collected rows."""
         c, flagged, kept = (
             self._stages["c"], self._stages["flagged"], self._stages["kept"]
         )
-        parse = {
-            (r["crawl_id"], r["depth"]): r
-            for r in c.groupBy("crawl_id", "depth").agg(
-                F.count(F.lit(1)).alias("extracted"),
-                F.count("url").alias("parsed_ok"),
-                F.count(F.when(F.col("_dom").isin("text", "all"), 1)).alias("after_f1"),
-            ).collect()
-        }
-        flag = {}
-        for r in flagged.groupBy("crawl_id", "depth", "reason").count().collect():
-            flag.setdefault((r["crawl_id"], r["depth"]), {})[r["reason"]] = r["count"]
-        keptc = {
-            (r["crawl_id"], r["depth"]): r
-            for r in kept.groupBy("crawl_id", "depth").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(F.col("do_index").cast("long")), F.lit(0)).alias("n_idx"),
-            ).collect()
-        }
-        rows = []
-        for (cid, depth), p in parse.items():
-            fl = flag.get((cid, depth), {})
-            k = keptc.get((cid, depth))
-            n_novel = sum(fl.values())
-            rows.append(
-                (
-                    cid, depth, p["extracted"], p["parsed_ok"],
-                    p["after_f1"] - n_novel,
-                    fl.get("pass", 0) - (k["n"] if k else 0),
-                    fl.get("filter", 0), fl.get("blacklist", 0),
-                    fl.get("robots", 0),
-                    k["n"] if k else 0, k["n_idx"] if k else 0,
+
+        def counters(df: DataFrame, **flags) -> DataFrame:
+            # a NULL flag counts 0, like count(when(flag, 1))
+            return df.select(
+                "crawl_id", "depth",
+                *[
+                    F.when(flags[k], 1).otherwise(0).cast("long").alias(k)
+                    if k in flags else F.lit(0).cast("long").alias(k)
+                    for k in _COUNTERS
+                ],
+            )
+
+        every = F.lit(True)
+        reason = F.col("reason")
+        rows = (
+            counters(
+                c, extracted=every, parsed_ok=F.col("url").isNotNull(),
+                after_f1=F.col("_dom").isin("text", "all"),
+            )
+            .unionByName(
+                counters(
+                    flagged, passed=reason == "pass",
+                    filter=reason == "filter", blacklist=reason == "blacklist",
+                    robots=reason == "robots",
                 )
             )
-        return c.sparkSession.createDataFrame(
-            rows,
-            "crawl_id string, depth int, extracted long, parsed_ok long, "
-            "deduped_session long, deduped_persistent long, rejected_filter long, "
-            "rejected_blacklist long, rejected_robots long, accepted long, do_index long",
+            .unionByName(counters(kept, kept=every, kept_idx=F.col("do_index")))
+            .groupBy("crawl_id", "depth")
+            .agg(*[F.sum(k).alias(k) for k in _COUNTERS])
+            .collect()
         )
+        out = []
+        for r in rows:
+            n_novel = r["passed"] + r["filter"] + r["blacklist"] + r["robots"]
+            out.append(
+                (
+                    r["crawl_id"], r["depth"], r["extracted"], r["parsed_ok"],
+                    r["after_f1"] - n_novel, r["passed"] - r["kept"],
+                    r["filter"], r["blacklist"], r["robots"],
+                    r["kept"], r["kept_idx"],
+                )
+            )
+        return out
 
     def unpersist(self) -> None:
         for df in self.cached:

@@ -21,7 +21,9 @@ until a manifest references them, so a crash mid-commit leaves only
 ignorable orphans — same recovery contract as Iceberg. Readers scan
 `{table}/` with partition discovery on `commit` and filter to the
 manifest's commit list: Spark partition pruning skips uncommitted
-dirs without listing their files.
+dirs without listing their files. Reads apply the declared SCHEMAS
+instead of inferring the schema from parquet footers (no Spark job per
+read); every append/replace is checked against the same SCHEMAS.
 
 At-least-once + FAIL_IRREVERSIBLE acks (CrawlerListener.java:203-447)
 become exactly-once: re-running a wave after a crash re-reads the last
@@ -134,6 +136,23 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
+def _check_schema(table: str, df: DataFrame) -> None:
+    """Raise unless `df`'s columns are exactly SCHEMAS[table]'s names
+    and types (nullability aside) — a driver-side analysis check, no
+    Spark job. Reads apply SCHEMAS instead of inferring it from the
+    files, so a drifting writer must fail at its own commit, not at
+    some later read."""
+    want = {fl.name: fl.dataType.simpleString() for fl in SCHEMAS[table]}
+    got = {fl.name: fl.dataType.simpleString() for fl in df.schema}
+    for name in sorted(want.keys() | got.keys()):
+        if want.get(name) != got.get(name):
+            raise ValueError(
+                f"state table {table!r}, column {name!r}: frame has "
+                f"{got.get(name) or 'no such column'}, schema declares "
+                f"{want.get(name) or 'no such column'}"
+            )
+
+
 class StateStore:
     def __init__(self, spark: SparkSession, root: str, write_partitions: int = 32):
         """`write_partitions` bounds output files per commit: local runs
@@ -170,13 +189,21 @@ class StateStore:
     # ---- read ------------------------------------------------------
     def read(self, table: str, version: int | None = None) -> DataFrame:
         man = self.manifest(version)
-        commits = man["tables"].get(table, [])
+        return self._read_commits(table, man["tables"].get(table, []))
+
+    def _read_commits(self, table: str, commits: list[int]) -> DataFrame:
+        """Schema-on-read scan of `table`'s commit dirs: the declared
+        SCHEMAS entry replaces parquet footer inference, so building
+        the DataFrame starts no Spark job (PendingCommit guards every
+        write against the same schema)."""
         if not commits:
             return self.spark.createDataFrame([], SCHEMAS[table])
         tdir = os.path.join(self.root, table)
         # partition discovery on commit=N + pruning filter
-        df = self.spark.read.option("basePath", tdir).parquet(
-            *[os.path.join(tdir, f"commit={c}") for c in commits]
+        df = (
+            self.spark.read.schema(SCHEMAS[table])
+            .option("basePath", tdir)
+            .parquet(*[os.path.join(tdir, f"commit={c}") for c in commits])
         )
         return df.drop("commit")
 
@@ -320,16 +347,10 @@ class StateStore:
         a = set(self.manifest(v_from)["tables"].get(table, []))
         b = set(self.manifest(v_to)["tables"].get(table, []))
 
-        def _read(commits: list[int]) -> DataFrame:
-            if not commits:
-                return self.spark.createDataFrame([], SCHEMAS[table])
-            tdir = os.path.join(self.root, table)
-            return self.spark.read.option("basePath", tdir).parquet(
-                *[os.path.join(tdir, f"commit={c}") for c in sorted(commits)]
-            ).drop("commit")
-
-        added = _read(sorted(b - a)).withColumn("change", F.lit("added"))
-        removed = _read(sorted(a - b)).withColumn(
+        added = self._read_commits(table, sorted(b - a)).withColumn(
+            "change", F.lit("added")
+        )
+        removed = self._read_commits(table, sorted(a - b)).withColumn(
             "change", F.lit("removed")
         )
         return added.unionByName(removed)
@@ -411,6 +432,7 @@ class PendingCommit:
         self.tables = {t: list(cs) for t, cs in prev_manifest["tables"].items()}
 
     def _write(self, table: str, df: DataFrame) -> None:
+        _check_schema(table, df)
         path = os.path.join(self.store.root, table, f"commit={self.version}")
         df.coalesce(self.store.write_partitions).write.mode(
             "errorifexists"

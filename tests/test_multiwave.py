@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from yacy_grid_crawler_spark.fixtures.gen import blacklist_lines, generate
 from yacy_grid_crawler_spark.operators.blacklist import parse_lines
 from yacy_grid_crawler_spark.plans.crawl_job import CrawlJob
+from yacy_grid_crawler_spark.session import local_frame
 
 SPANS_SCHEMA = T.StructType(
     [
@@ -67,9 +68,10 @@ def two_corpora(spark):
             for d in c.docs
         ]
         robots_rows += [(h, r["disallow"], r["delay_ms"]) for h, r in c.robots.items()]
-    docs_df = spark.createDataFrame(docs, SPANS_SCHEMA)
-    robots_df = spark.createDataFrame(
-        robots_rows, "host string, disallow_prefixes array<string>, crawl_delay_ms int"
+    # LocalRelations, like the session fixtures in conftest.py
+    docs_df = local_frame(spark, docs, SPANS_SCHEMA)
+    robots_df = local_frame(
+        spark, robots_rows, "host string, disallow_prefixes array<string>, crawl_delay_ms int"
     )
     rules = parse_lines(blacklist_lines(a))
     return a, b, docs_df, robots_df, rules
@@ -328,3 +330,22 @@ def test_concurrent_bucketed_seen_equals_default(
             ),
         )
     assert states[True] == states[False]
+
+
+def test_profiles_dimension_is_a_local_relation(spark):
+    """The broadcast profile dimension is built from driver-held rows
+    as a LocalRelation (no pickled RDD behind it), empty or not."""
+    from yacy_grid_crawler_spark.config import make_profile
+    from yacy_grid_crawler_spark.plans.multiwave import profiles_to_df
+
+    profile = {
+        **make_profile({"crawlingDepth": 2, "collection": "user,extra"}),
+        "start_url": "http://a.x/", "start_ssld": "a.x",
+    }
+    for profiles in ({"c1": profile}, {}):
+        df = profiles_to_df(spark, profiles)
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        rows = df.collect()
+        assert [r["crawl_id"] for r in rows] == list(profiles)
+    assert rows == [] and df.columns[0] == "crawl_id"

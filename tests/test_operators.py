@@ -54,17 +54,54 @@ def test_crawl_id_format():
 def test_seed_splitter_separators(spark):
     # CrawlerListener.java:117 — |http, %7Chttp, %0D%0A, %0A, %0D, space
     rows = split_seeds(
-        spark,
         [
             "http://a.x/1|http://b.x/2%7Chttp://c.x/3",
             "http://d.x/4%0D%0Ahttp://e.x/5%0Ahttp://f.x/6%0Dhttp://g.x/7 http://h.x/8",
             "junkpiece http://i.x/9",
         ],
-    ).collect()
+    )
     good = [r["url"] for r in rows if r["url"] is not None]
     bad = [r["url_raw"] for r in rows if r["url"] is None]
     assert len(good) == 9
     assert bad == ["junkpiece"]
+
+
+def test_driver_seed_split_equals_spark_split(spark):
+    """The driver-side split that CrawlJob.start uses equals the JVM
+    separator chain (split_seed_column) plus the canonicalize UDF,
+    piece for piece, malformed and messy pieces included."""
+    from yacy_grid_crawler_spark.functions.udfs import canonicalize
+    from yacy_grid_crawler_spark.operators.seeds import split_seed_column
+
+    seeds = [
+        "http://a.x/1|http://b.x/2%7Chttp://c.x/3",
+        "http://d.x/4%0D%0Ahttp://e.x/5%0Ahttp://f.x/6%0Dhttp://g.x/7 http://h.x/8",
+        "junkpiece http://i.x/9",
+        "HTTP://Ex.COM:80/a/../b?x=1#f",
+    ]
+    spark_rows = (
+        spark.createDataFrame(list(enumerate(seeds)), "seed_ord int, seed_raw string")
+        .select(
+            "seed_ord",
+            F.posexplode(split_seed_column(F.col("seed_raw"))).alias(
+                "piece_ord", "url_raw"
+            ),
+        )
+        .filter(F.col("url_raw") != "")
+        .withColumn("url", canonicalize(F.col("url_raw")))
+        .collect()
+    )
+    want = sorted(
+        (r["seed_ord"], r["piece_ord"], r["url_raw"], r["url"]) for r in spark_rows
+    )
+    got = sorted(
+        (r["seed_ord"], r["piece_ord"], r["url_raw"], r["url"])
+        for r in split_seeds(seeds)
+    )
+    assert got == want
+    assert ("HTTP://Ex.COM:80/a/../b?x=1#f", "http://ex.com/b?x=1") in {
+        (g[2], g[3]) for g in got
+    }
 
 
 def test_blacklist_file_format():

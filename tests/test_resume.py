@@ -36,9 +36,12 @@ def _final_state(job, cid):
     return seen, frontier
 
 
-def test_resume_equals_uninterrupted(spark, corpus, docs_df, robots_df, tmp_path):
-    # straight-through run
-    job_a, cid_a = _run(spark, corpus, docs_df, robots_df, str(tmp_path / "a"), None)
+def test_resume_equals_uninterrupted(
+    spark, corpus, docs_df, robots_df, tmp_path, reference_crawl
+):
+    # straight-through run: conftest's reference_crawl is `_run(...,
+    # None)` of the same crawl
+    job_a, cid_a = reference_crawl
     # interrupted after wave 1, resumed by a FRESH CrawlJob (profiles
     # restored from the snapshot manifest, like a new driver process)
     job_b, cid_b = _run(spark, corpus, docs_df, robots_df, str(tmp_path / "b"), 1)
@@ -297,7 +300,7 @@ def test_checkpoint_filters_survive_process_restart(
 
 
 def test_checkpoint_filters_enabled_mid_crawl_covers_prior_seen(
-    spark, corpus, docs_df, robots_df, tmp_path
+    spark, corpus, docs_df, robots_df, tmp_path, reference_crawl
 ):
     """Enabling --checkpoint-filters on a store with pre-existing
     url_seen rows (crawl started WITHOUT the flag) must bootstrap the
@@ -312,11 +315,7 @@ def test_checkpoint_filters_enabled_mid_crawl_covers_prior_seen(
     seed = corpus.seeds[0]
 
     # reference: uninterrupted run without checkpoint filters
-    root_a = str(tmp_path / "a")
-    job_a = CrawlJob(spark, root_a, docs_df, blacklist=rules, robots=robots_df,
-                     n_shards=8)
-    (cid_a,) = job_a.start(seed, {"crawlingDepth": 2})
-    job_a.run([cid_a])
+    job_a, cid_a = reference_crawl
 
     # crawl B: two waves WITHOUT the flag, then resume WITH it
     root_b = str(tmp_path / "b")
@@ -391,7 +390,7 @@ def test_snapshot_diff_is_o_delta_changelog(spark, corpus, docs_df, robots_df, t
 
 
 def test_bucketed_seen_resume_rebuilds_mirror(
-    spark, corpus, docs_df, robots_df, tmp_path
+    spark, corpus, docs_df, robots_df, tmp_path, reference_crawl
 ):
     """A fresh driver resuming a bucketed_seen store has lost the
     session catalog (and the mirror may trail the snapshot): the
@@ -399,10 +398,7 @@ def test_bucketed_seen_resume_rebuilds_mirror(
     crawl must converge to the same final state as a straight run."""
     rules = parse_lines(blacklist_lines(corpus))
     # reference: uninterrupted default-layout run
-    ref, cid_ref = _run(
-        spark, corpus, docs_df, robots_df, str(tmp_path / "ref"), None
-    )
-    ref_state = _final_state(ref, cid_ref)
+    ref_state = _final_state(*reference_crawl)
 
     root = str(tmp_path / "b")
     job = CrawlJob(
@@ -484,13 +480,86 @@ def test_fresh_store_start_writes_no_status_commit(
 ):
     """S8 has nothing to delete on a store without crawl_status
     commits: start() then commits crawl_starts only, with no empty
-    crawl_status commit dir."""
+    crawl_status commit dir. The seed split and the crawl_starts rows
+    stay on the driver, so the commit's write is start()'s one Spark
+    job."""
     root = str(tmp_path / "st")
     job = CrawlJob(spark, root, docs_df, robots=robots_df, n_shards=4)
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
     cids = job.start(corpus.seeds[0], {"crawlingDepth": 1})
+    assert len(set(tracker.getJobIdsForGroup()) - before) == 1
     assert cids
     tables = job.store.manifest()["tables"]
     assert "crawl_status" not in tables
     assert tables["crawl_starts"] == [1]
     assert not os.path.exists(os.path.join(root, "crawl_status"))
     assert job.store.read("crawl_status").count() == 0
+
+
+def _slots(spark, host):
+    from yacy_grid_crawler_spark.sources.statestore import SCHEMAS
+
+    return spark.createDataFrame([("c1", host, 1)], SCHEMAS["host_slots"])
+
+
+def test_retry_after_crash_mid_commit(spark, tmp_path):
+    """A commit that died after a sink write and before finalize()
+    leaves its data behind; the retry stages the same version and
+    appends the same table beside it, and reads see only the retry."""
+    from yacy_grid_crawler_spark.sources.statestore import StateStore
+
+    store = StateStore(spark, str(tmp_path / "st"))
+    crashed = store.begin()
+    crashed.append("host_slots", _slots(spark, "crashed"))  # no finalize
+    retry = store.begin()
+    assert retry.version == crashed.version
+    retry.append("host_slots", _slots(spark, "retry"))
+    retry.finalize()
+    assert [r["host"] for r in store.read("host_slots").collect()] == ["retry"]
+    commit_dir = os.path.join(store.root, "host_slots", f"commit={retry.version}")
+    assert len(os.listdir(commit_dir)) == 2
+    store.rollback_orphans()  # reclaims the crashed attempt only
+    assert os.listdir(commit_dir) == [retry.attempt]
+    assert [r["host"] for r in store.read("host_slots").collect()] == ["retry"]
+
+
+def test_second_writer_of_a_version_conflicts(spark, tmp_path):
+    """Two commits staged from the same base: the first finalize()
+    publishes, the second raises instead of replacing the first one's
+    snapshot, and the first writer's rows and seen filter still read
+    back although the second wrote a filter for the same crawl."""
+    import pandas as pd
+
+    from yacy_grid_crawler_spark.functions.bloom import UrlBloom, to_bytes
+    from yacy_grid_crawler_spark.sources.statestore import (
+        SCHEMAS,
+        CommitConflict,
+        StateStore,
+    )
+
+    def bloom_of(url_id):
+        b = UrlBloom(1024)
+        b.add_many(pd.Series([url_id]))
+        return b
+
+    store = StateStore(spark, str(tmp_path / "st"))
+    first, second = store.begin(), store.begin()
+    first.append("host_slots", _slots(spark, "first"))
+    ent1 = store.write_seen_filter("c1", bloom_of("a" * 32), 1, 1024, first)
+    second.append(
+        "url_seen", spark.createDataFrame([("c1", "u2", 0, 0)], SCHEMAS["url_seen"])
+    )
+    ent2 = store.write_seen_filter("c1", bloom_of("b" * 32), 1, 1024, second)
+    first.finalize(meta={"seen_filters": {"c1": ent1}})
+    with pytest.raises(CommitConflict):
+        second.finalize(meta={"seen_filters": {"c1": ent2}})
+    assert store.versions() == [first.version]
+    assert [r["host"] for r in store.read("host_slots").collect()] == ["first"]
+    assert store.read("url_seen").count() == 0
+    bloom, entry = store.load_seen_filter("c1")
+    assert entry == ent1
+    assert to_bytes(bloom) == to_bytes(bloom_of("a" * 32))
+    assert os.listdir(os.path.join(store.root, "_snapshots")) == ["v000001.json"]

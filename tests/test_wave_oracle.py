@@ -21,27 +21,16 @@ from yacy_grid_crawler_spark.plans.crawl_job import CrawlJob
 
 
 @pytest.fixture(scope="module")
-def crawl_result(spark, corpus, docs_df, robots_df, tmp_path_factory):
-    """Run one 2-deep crawl in both the engine and the oracle."""
-    store_root = str(tmp_path_factory.mktemp("store"))
+def crawl_result(reference_crawl, corpus):
+    """One 2-deep crawl in both the engine (conftest's reference_crawl)
+    and the oracle."""
     rules = parse_lines(blacklist_lines(corpus))
     seed = corpus.seeds[0]
     overrides = {"crawlingDepth": 2}
-
-    job = CrawlJob(
-        spark,
-        store_root,
-        docs_df,
-        blacklist=rules,
-        robots=robots_df,
-        n_shards=8,
-    )
-    cids = job.start(seed, overrides)
-    assert len(cids) == 1
-    job.run(cids)
+    job, cid = reference_crawl
 
     profile = build_crawl_start(make_profile(overrides), seed)
-    profile["id"] = cids[0]
+    profile["id"] = cid
     docs_map = {d["doc_id"]: d["spans"] for d in corpus.docs}
     blk = [
         {"rule_kind": r.rule_kind, "host": r.host, "pattern": r.pattern}
@@ -49,7 +38,7 @@ def crawl_result(spark, corpus, docs_df, robots_df, tmp_path_factory):
     ]
     robots = {h: {"disallow": r["disallow"], "delay_ms": r["delay_ms"]} for h, r in corpus.robots.items()}
     oracle = oracle_crawl(docs_map, [seed], profile, blacklist=blk, robots=robots)
-    return job, cids[0], oracle
+    return job, cid, oracle
 
 
 def test_seen_set_equality(crawl_result):
@@ -98,24 +87,23 @@ def test_status_equality(crawl_result):
     assert engine_status == oracle.status
 
 
-def test_bloom_path_wave_equals_exact_path(spark, corpus, docs_df, robots_df, tmp_path_factory):
+def test_bloom_path_wave_equals_exact_path(
+    spark, corpus, docs_df, robots_df, tmp_path_factory, reference_crawl
+):
     """use_bloom=True must be a pure optimization: identical frontier,
     seen set, and metrics as the exact anti-join path (a bloom FP can
-    shrink the pre-filter but never change the decision)."""
-    from yacy_grid_crawler_spark.fixtures.gen import blacklist_lines
-    from yacy_grid_crawler_spark.operators.blacklist import parse_lines
-
+    shrink the pre-filter but never change the decision). The exact
+    path is conftest's reference_crawl, the same crawl with default
+    settings."""
     rules = parse_lines(blacklist_lines(corpus))
-    seed = corpus.seeds[0]
+    store_root = str(tmp_path_factory.mktemp("store_bloom_True"))
+    bloom_job = CrawlJob(
+        spark, store_root, docs_df, blacklist=rules, robots=robots_df,
+        n_shards=8, use_bloom=True,
+    )
+    bloom_job.run(bloom_job.start(corpus.seeds[0], {"crawlingDepth": 2}))
     outs = {}
-    for use_bloom in (False, True):
-        store_root = str(tmp_path_factory.mktemp(f"store_bloom_{use_bloom}"))
-        job = CrawlJob(
-            spark, store_root, docs_df, blacklist=rules, robots=robots_df,
-            n_shards=8, use_bloom=use_bloom,
-        )
-        cids = job.start(seed, {"crawlingDepth": 2})
-        job.run(cids)
+    for use_bloom, job in ((False, reference_crawl[0]), (True, bloom_job)):
         frontier = sorted(
             tuple(r[c] for c in ("depth", "batch_no", "batch_pos", "url_id"))
             for r in job.store.read("frontier").collect()
@@ -257,45 +245,21 @@ def test_wave_invariant_under_repartition_and_permutation(
 
 
 def test_checkpointed_seen_filter_equals_exact(
-    spark, corpus, docs_df, robots_df, tmp_path_factory
+    spark, corpus, docs_df, robots_df, tmp_path_factory, reference_crawl
 ):
     """North star: the seen bloom is built at wave COMMIT, persisted in
     the snapshot, and PROBED next wave — never rebuilt from the seen
-    table mid-crawl. Results must equal the exact anti-join path."""
+    table mid-crawl. Results must equal the exact anti-join path
+    (conftest's reference_crawl, the same crawl with default settings)."""
     from yacy_grid_crawler_spark.fixtures.gen import blacklist_lines
     from yacy_grid_crawler_spark.operators.blacklist import parse_lines
     from yacy_grid_crawler_spark.plans.crawl_job import CrawlJob
 
     rules = parse_lines(blacklist_lines(corpus))
     seed = corpus.seeds[0]
-    outs = {}
-    for ckpt in (False, True):
-        root = str(tmp_path_factory.mktemp(f"store_ckpt_{ckpt}"))
-        job = CrawlJob(
-            spark, root, docs_df, blacklist=rules, robots=robots_df,
-            n_shards=8, checkpoint_filters=ckpt,
-        )
-        if ckpt:
-            # probing a checkpointed filter must never trigger an
-            # O(seen) per-wave rebuild inside the wave
-            import yacy_grid_crawler_spark.functions.bloom as bloom_mod
 
-            def _no_rebuild(*a, **k):
-                raise AssertionError(
-                    "per-wave bloom rebuild reached with checkpoint_filters=True"
-                )
-
-            # bloom_prefilter imports build_from_spark at call time,
-            # so patching the module attribute intercepts any rebuild
-            orig_build = bloom_mod.build_from_spark
-            bloom_mod.build_from_spark = _no_rebuild
-        try:
-            cids = job.start(seed, {"crawlingDepth": 2})
-            job.run(cids)
-        finally:
-            if ckpt:
-                bloom_mod.build_from_spark = orig_build
-        outs[ckpt] = (
+    def state(job):
+        return (
             frozenset(
                 (r["crawl_id"], r["url_id"])
                 for r in job.store.read("url_seen").collect()
@@ -305,19 +269,44 @@ def test_checkpointed_seen_filter_equals_exact(
                 for r in job.store.read("frontier").collect()
             ),
         )
-        if ckpt:
-            # filter persisted in the snapshot with a sane fill count
-            meta = job.store.manifest()["meta"]["seen_filters"]
-            assert cids[0] in meta and meta[cids[0]]["n"] > 0
-            loaded = job.store.load_seen_filter(cids[0])
-            assert loaded is not None
-            bloom, ent = loaded
-            import pandas as pd
 
-            seen_ids = pd.Series(
-                [r["url_id"] for r in job.store.read("url_seen").collect()]
-            )
-            assert bloom.might_contain(seen_ids).all()  # no false negatives
+    outs = {False: state(reference_crawl[0])}
+    root = str(tmp_path_factory.mktemp("store_ckpt_True"))
+    job = CrawlJob(
+        spark, root, docs_df, blacklist=rules, robots=robots_df,
+        n_shards=8, checkpoint_filters=True,
+    )
+    # probing a checkpointed filter must never trigger an
+    # O(seen) per-wave rebuild inside the wave
+    import yacy_grid_crawler_spark.functions.bloom as bloom_mod
+
+    def _no_rebuild(*a, **k):
+        raise AssertionError(
+            "per-wave bloom rebuild reached with checkpoint_filters=True"
+        )
+
+    # bloom_prefilter imports build_from_spark at call time,
+    # so patching the module attribute intercepts any rebuild
+    orig_build = bloom_mod.build_from_spark
+    bloom_mod.build_from_spark = _no_rebuild
+    try:
+        cids = job.start(seed, {"crawlingDepth": 2})
+        job.run(cids)
+    finally:
+        bloom_mod.build_from_spark = orig_build
+    outs[True] = state(job)
+    # filter persisted in the snapshot with a sane fill count
+    meta = job.store.manifest()["meta"]["seen_filters"]
+    assert cids[0] in meta and meta[cids[0]]["n"] > 0
+    loaded = job.store.load_seen_filter(cids[0])
+    assert loaded is not None
+    bloom, ent = loaded
+    import pandas as pd
+
+    seen_ids = pd.Series(
+        [r["url_id"] for r in job.store.read("url_seen").collect()]
+    )
+    assert bloom.might_contain(seen_ids).all()  # no false negatives
     assert outs[False] == outs[True]
 
 
@@ -383,58 +372,70 @@ def test_clocked_crawl_equals_oracle_at_nonzero_wave_starts(
     assert starts.get(cid, 0) >= BASE
 
 
+def _stepped_crawl(spark, corpus, docs_df, robots_df, root, **kwargs):
+    """Step crawl 0 to depth 2 to its end; the final state and the
+    number of steps that asked for another wave."""
+    rules = parse_lines(blacklist_lines(corpus))
+    job = CrawlJob(
+        spark, root, docs_df, blacklist=rules, robots=robots_df,
+        n_shards=8, **kwargs,
+    )
+    (cid,) = job.start(corpus.seeds[0], {"crawlingDepth": 2})
+    waves = 0
+    while job.step(cid):
+        waves += 1
+        assert waves < 200, "capped crawl failed to converge"
+    return {
+        "waves": waves,
+        "seen": frozenset(
+            r["url_id"] for r in job.store.read("url_seen")
+            .filter(F.col("crawl_id") == cid).collect()
+        ),
+        "status": {
+            r["url_id"]: (r["status"], r["comment_class"])
+            for r in job.store.read("crawl_status")
+            .filter(F.col("crawl_id") == cid).collect()
+        },
+        "order": [
+            tuple(r[c] for c in (
+                "depth", "do_index", "batch_no", "batch_pos", "url",
+                "url_id", "fetch_slot", "not_before_ms",
+            ))
+            for r in job.store.read("frontier")
+            .filter(F.col("crawl_id") == cid)
+            .orderBy("depth", (1 - F.col("do_index").cast("int")),
+                     "batch_no", "batch_pos")
+            .collect()
+        ],
+        # cursor must be cleared once the crawl drains
+        "cursor": job.store.manifest()["meta"]
+        .get("wave_cursors", {}).get(cid),
+    }
+
+
+@pytest.fixture(scope="module")
+def uncapped_crawl(spark, corpus, docs_df, robots_df, tmp_path_factory):
+    """The uncapped run both cap sizes compare against."""
+    root = str(tmp_path_factory.mktemp("store_cap_uncapped"))
+    return _stepped_crawl(spark, corpus, docs_df, robots_df, root)
+
+
 @pytest.mark.parametrize("cap", [5, 16])
 def test_wave_size_cap_equals_uncapped(
-    spark, corpus, docs_df, robots_df, tmp_path_factory, cap
+    spark, corpus, docs_df, robots_df, tmp_path_factory, uncapped_crawl, cap
 ):
     """Backpressure (reference: 100k queued-message throttle,
     conf/config.properties:5): a capped crawl takes more waves but
     converges to the IDENTICAL final seen set, status table, and
     canonical frontier order as the uncapped run — batch numbering,
     fetch slots, and within-depth dedup all carry across sub-waves."""
-    from yacy_grid_crawler_spark.fixtures.gen import blacklist_lines
-    from yacy_grid_crawler_spark.operators.blacklist import parse_lines
-
-    rules = parse_lines(blacklist_lines(corpus))
-    seed = corpus.seeds[0]
-    outs = {}
-    for label, kwargs in (("uncapped", {}), ("capped", {"max_wave_urls": cap})):
-        root = str(tmp_path_factory.mktemp(f"store_cap_{cap}_{label}"))
-        job = CrawlJob(
-            spark, root, docs_df, blacklist=rules, robots=robots_df,
-            n_shards=8, **kwargs,
-        )
-        (cid,) = job.start(seed, {"crawlingDepth": 2})
-        waves = 0
-        while job.step(cid):
-            waves += 1
-            assert waves < 200, "capped crawl failed to converge"
-        outs[label] = {
-            "waves": waves,
-            "seen": frozenset(
-                r["url_id"] for r in job.store.read("url_seen")
-                .filter(F.col("crawl_id") == cid).collect()
-            ),
-            "status": {
-                r["url_id"]: (r["status"], r["comment_class"])
-                for r in job.store.read("crawl_status")
-                .filter(F.col("crawl_id") == cid).collect()
-            },
-            "order": [
-                tuple(r[c] for c in (
-                    "depth", "do_index", "batch_no", "batch_pos", "url",
-                    "url_id", "fetch_slot", "not_before_ms",
-                ))
-                for r in job.store.read("frontier")
-                .filter(F.col("crawl_id") == cid)
-                .orderBy("depth", (1 - F.col("do_index").cast("int")),
-                         "batch_no", "batch_pos")
-                .collect()
-            ],
-            # cursor must be cleared once the crawl drains
-            "cursor": job.store.manifest()["meta"]
-            .get("wave_cursors", {}).get(cid),
-        }
+    root = str(tmp_path_factory.mktemp(f"store_cap_{cap}_capped"))
+    outs = {
+        "uncapped": uncapped_crawl,
+        "capped": _stepped_crawl(
+            spark, corpus, docs_df, robots_df, root, max_wave_urls=cap
+        ),
+    }
     assert outs["capped"]["waves"] > outs["uncapped"]["waves"]
     assert outs["capped"]["cursor"] is None
     assert outs["capped"]["seen"] == outs["uncapped"]["seen"]
@@ -589,7 +590,7 @@ def test_bucketed_seen_equals_default(
 
 
 def test_bucketed_seen_auto_threshold(
-    spark, corpus, docs_df, robots_df, tmp_path_factory
+    spark, corpus, docs_df, robots_df, tmp_path_factory, reference_crawl
 ):
     """Default bucketed_seen="auto" flips the mirror on exactly when
     url_seen's on-disk bytes cross the threshold, and the decision is
@@ -611,14 +612,12 @@ def test_bucketed_seen_auto_threshold(
     assert job._bucketed_enabled()
     assert job._mirror_marker() is not None  # mirror actually built
 
-    # huge threshold → stays off, no mirror artifacts
-    root2 = str(tmp_path_factory.mktemp("store_auto_off"))
-    job2 = CrawlJob(
-        spark, root2, docs_df, blacklist=rules, robots=robots_df,
-        n_shards=8,  # default auto + default 128 MB threshold
-    )
-    cids2 = job2.start(corpus.seeds[0], {"crawlingDepth": 2})
-    job2.run(cids2)
+    # huge threshold → stays off, no mirror artifacts: conftest's
+    # reference_crawl is this crawl with default auto + default 128 MB
+    # threshold
+    job2 = reference_crawl[0]
+    assert job2.bucketed_seen == "auto"
+    assert job2.bucketed_seen_threshold_bytes == 128 << 20
     assert 0 < job2.store.table_bytes("url_seen") < 128 << 20
     assert not job2._bucketed_enabled()
     assert job2._mirror_marker() is None

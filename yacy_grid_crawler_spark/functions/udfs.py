@@ -1,6 +1,12 @@
-"""Vectorized Arrow (pandas) UDF kernels — the engine's ONLY Python
-execution surface (SURVEY.md §2 "UDF/UDAF/UDTF surface"). Everything
-else stays JVM-side in whole-stage codegen.
+"""Vectorized Arrow (pandas) UDF kernels — with the opt-in seen-set
+filter kernels (functions/bloom.py: `use_bloom`, `checkpoint_filters`)
+the engine's ONLY per-wave Python execution surface (SURVEY.md §2 "UDF/UDAF/UDTF
+surface"). Everything else stays JVM-side in whole-stage codegen: the
+frames the crawl path builds from rows the driver holds (crawl starts,
+depth-0 seed rows, the profile dimension, metrics rows) are JVM
+LocalRelations (`session.local_frame`), so no wave or crawl start ships
+pickled Python rows. The blacklist host set is the one pickled frame
+left; it is built once per process and read from cache after that.
 
 Each UDF wraps the pure-Python spec functions in functions/urlnorm.py,
 so the Spark engine and the executable-spec oracle share one

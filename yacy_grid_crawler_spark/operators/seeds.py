@@ -6,17 +6,19 @@ separators ``|http``, ``%7Chttp``, ``%0D%0A``, ``%0A``, ``%0D``,
 space → newline; each piece parsed, malformed pieces diverted to
 ``badURLStrings``. Used from CrawlStartService.java:105.
 
-Spark-first: the separator normalization is pure JVM
-(`regexp_replace` chain + `split` + `explode` + `posexplode` for seed
-ordinals); only the parse/canonicalize step uses the Arrow UDF kernel.
+A crawl start splits its one seed string on the driver
+(`split_seeds`); `split_seed_column` is the same separator chain as a
+JVM column expression for seed lists that live in a table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonicalize
+from ..functions.urlnorm import canonicalize_url
 
 # (pattern, replacement) — order mirrors CrawlerListener.java:117
 _SEPARATOR_RULES = [
@@ -37,24 +39,29 @@ def split_seed_column(col):
     return F.split(c, "\n")
 
 
-def split_seeds(spark: SparkSession, seed_strings: list[str]) -> DataFrame:
-    """seeds → (seed_ord, url_raw, url) with url NULL for malformed.
+def split_seeds(seed_strings: list[str]) -> list[dict]:
+    """seeds → rows of (seed_ord, piece_ord, url_raw, url), url None
+    for malformed pieces. Callers partition into good (`url` set) and
+    bad seeds (CrawlerListener.java:122-131).
 
-    Callers partition into good (`url IS NOT NULL`) and bad seeds
-    (CrawlerListener.java:122-131).
-    """
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(seed_strings)], "seed_ord int, seed_raw string"
-    )
-    return (
-        df.select(
-            "seed_ord",
-            F.posexplode(split_seed_column(F.col("seed_raw"))).alias("piece_ord", "url_raw"),
-        )
-        .filter(F.col("url_raw") != "")
-        .withColumn("url", canonicalize(F.col("url_raw")))
-        .select("seed_ord", "piece_ord", "url_raw", "url")
-    )
+    Driver-side, like the reference's REST handler
+    (CrawlStartService.java:105): a crawl start holds one seed string,
+    so splitting it in Spark would cost a job for a few pieces. Same
+    separator rules as `split_seed_column` and the same
+    `canonicalize_url` spec the `canonicalize` UDF wraps."""
+    rows = []
+    for seed_ord, seed in enumerate(seed_strings):
+        if seed is None:
+            continue
+        for pat, rep in _SEPARATOR_RULES:
+            seed = re.sub(pat, rep, seed)
+        for piece_ord, raw in enumerate(seed.split("\n")):
+            if raw:
+                rows.append({
+                    "seed_ord": seed_ord, "piece_ord": piece_ord,
+                    "url_raw": raw, "url": canonicalize_url(raw),
+                })
+    return rows
 
 
 def parse_sitemap(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..config import build_crawl_start, make_profile
 from ..operators.blacklist import BlacklistRule
 from ..operators.seeds import split_seeds
+from ..session import local_frame
 from ..sources.statestore import SCHEMAS, StateStore
 from .wave import run_wave
 
@@ -146,10 +147,13 @@ class CrawlJob:
     ) -> list[str]:
         """Entry point 1 (SURVEY.md §3.1): seed a crawl; one crawl id
         PER seed URL (CrawlStartService.java:110-200). Returns the new
-        crawl ids. Malformed seed pieces are dropped (badURLStrings)."""
+        crawl ids. Malformed seed pieces are dropped (badURLStrings).
+        The seed split and the crawl_starts rows stay on the driver, so
+        on a store without crawl_status commits the commit's write is
+        the only Spark job."""
         now = now or datetime(2020, 1, 1, tzinfo=timezone.utc)
         profile = make_profile({**(overrides or {}), "crawlingURL": crawling_url})
-        seeds = split_seeds(self.spark, [crawling_url]).collect()
+        seeds = split_seeds([crawling_url])
         good = [r for r in seeds if r["url"] is not None]
         new_ids: list[str] = []
         start_rows = []
@@ -169,11 +173,7 @@ class CrawlJob:
                     json.dumps(single, default=str),
                 )
             )
-        starts = self.spark.createDataFrame(
-            start_rows,
-            "crawl_id string, user_id string, mustmatch string, collection string, "
-            "start_url string, start_ssld string, profile_json string",
-        )
+        starts = local_frame(self.spark, start_rows, SCHEMAS["crawl_starts"])
         # S8 — delete conflicting old status entries (see
         # _s8_surviving_status); a store with no crawl_status commits
         # has nothing to delete, so it gets no empty replace commit
@@ -279,7 +279,7 @@ class CrawlJob:
         return ent[0]
 
     def _update_seen_filter(
-        self, cid: str, version: int, meta: dict, delta, n_delta: int
+        self, cid: str, pc, meta: dict, delta, n_delta: int
     ) -> None:
         """Fold this wave's url_seen DELTA into the crawl's bloom and
         persist it BEFORE the manifest referencing it. `delta` is the
@@ -334,7 +334,7 @@ class CrawlJob:
             fold_into(bloom, full)
         elif n_delta:
             fold_into(bloom, delta)
-        entry = self.store.write_seen_filter(cid, bloom, n, cap, version)
+        entry = self.store.write_seen_filter(cid, bloom, n, cap, pc)
         meta.setdefault("seen_filters", {})[cid] = entry
         self._seen_filters[cid] = [bloom, n, cap]
 
@@ -360,7 +360,8 @@ class CrawlJob:
                 by_parent_depth.setdefault(d - 1, []).append(cid)
         parts = []
         if seeds:
-            parts.append(self.spark.createDataFrame(
+            parts.append(local_frame(
+                self.spark,
                 seeds,
                 "crawl_id string, depth int, parent_ini int, "
                 "parent_batch_no long, parent_batch_pos int, "
@@ -737,7 +738,7 @@ class CrawlJob:
                 + counts["rejected_blacklist"]
                 + counts["rejected_robots"]
             )
-            self._update_seen_filter(cid, pc.version, meta, res.seen, n_delta)
+            self._update_seen_filter(cid, pc, meta, res.seen, n_delta)
         pc.finalize(meta=meta)
         self._mirror_append(pc.version, res.seen, res.status)
         res.unpersist()
@@ -901,7 +902,7 @@ class CrawlJob:
         )
         metrics_schema = SCHEMAS["crawl_metrics"]
         rows = res.metrics_rows()
-        pc.append("crawl_metrics", self.spark.createDataFrame(rows, metrics_schema))
+        pc.append("crawl_metrics", local_frame(self.spark, rows, metrics_schema))
         meta2 = self._meta({cid: depths[cid] + 1 for cid in stepped})
         for cid in stepped:
             meta2.setdefault("wave_starts", {})[cid] = wave_start_ms
@@ -926,7 +927,7 @@ class CrawlJob:
             for cid in stepped:
                 self._update_seen_filter(
                     cid,
-                    pc.version,
+                    pc,
                     meta2,
                     res.seen.filter(F.col("crawl_id") == cid),
                     novel.get(cid, 0),

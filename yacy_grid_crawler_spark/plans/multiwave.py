@@ -58,6 +58,7 @@ from ..config import parse_collections
 from ..operators.blacklist import BlacklistRule, apply_blacklist
 from ..operators.dedup import dedup_against_seen, first_occurrence
 from ..operators.filters import anchored, robots_verdict
+from ..session import local_frame
 from .wave import CANON_ORDER
 
 PROFILE_SCHEMA = (
@@ -70,7 +71,8 @@ PROFILE_SCHEMA = (
 def profiles_to_df(spark: SparkSession, profiles: dict[str, dict]) -> DataFrame:
     """Broadcast profile dimension: one row per crawl, regex patterns
     pre-anchored (Matcher.matches semantics); empty mustnotmatch →
-    NULL (matches nothing)."""
+    NULL (matches nothing). A LocalRelation, so broadcasting it runs no
+    job."""
     rows = []
     for cid, p in profiles.items():
         rows.append(
@@ -88,7 +90,7 @@ def profiles_to_df(spark: SparkSession, profiles: dict[str, dict]) -> DataFrame:
                 list(parse_collections(p.get("collection"))),
             )
         )
-    return spark.createDataFrame(rows, PROFILE_SCHEMA)
+    return local_frame(spark, rows, PROFILE_SCHEMA)
 
 
 # per-(crawl, depth) counters summed by MultiWaveResult.metrics_rows
@@ -113,43 +115,40 @@ class MultiWaveResult:
         a narrow 0/1 counter projection of each stage (parsed
         candidates, flagged novel rows, kept rows), unioned and summed
         by (crawl_id, depth); everything else is driver arithmetic on
-        the collected rows."""
-        c, flagged, kept = (
-            self._stages["c"], self._stages["flagged"], self._stages["kept"]
-        )
+        the collected rows. Each projection is one parsed selectExpr:
+        building it from Column calls cost a py4j round trip per
+        call."""
 
-        def counters(df: DataFrame, **flags) -> DataFrame:
-            # a NULL flag counts 0, like count(when(flag, 1))
-            return df.select(
+        def counters(stage: str, **flags: str) -> DataFrame:
+            # SQL flags; a NULL flag counts 0, like count(when(flag, 1))
+            return self._stages[stage].selectExpr(
                 "crawl_id", "depth",
                 *[
-                    F.when(flags[k], 1).otherwise(0).cast("long").alias(k)
-                    if k in flags else F.lit(0).cast("long").alias(k)
+                    f"IF({flags[k]}, 1L, 0L) AS `{k}`" if k in flags else f"0L AS `{k}`"
                     for k in _COUNTERS
                 ],
             )
 
-        every = F.lit(True)
-        reason = F.col("reason")
         rows = (
             counters(
-                c, extracted=every, parsed_ok=F.col("url").isNotNull(),
-                after_f1=F.col("_dom").isin("text", "all"),
+                "c", extracted="true", parsed_ok="url IS NOT NULL",
+                after_f1="_dom IN ('text', 'all')",
             )
             .unionByName(
                 counters(
-                    flagged, passed=reason == "pass",
-                    filter=reason == "filter", blacklist=reason == "blacklist",
-                    robots=reason == "robots",
+                    "flagged", passed="reason = 'pass'",
+                    filter="reason = 'filter'", blacklist="reason = 'blacklist'",
+                    robots="reason = 'robots'",
                 )
             )
-            .unionByName(counters(kept, kept=every, kept_idx=F.col("do_index")))
+            .unionByName(counters("kept", kept="true", kept_idx="do_index"))
             .groupBy("crawl_id", "depth")
-            .agg(*[F.sum(k).alias(k) for k in _COUNTERS])
+            .sum(*_COUNTERS)
             .collect()
         )
         out = []
-        for r in rows:
+        for row in rows:
+            r = dict(zip(("crawl_id", "depth", *_COUNTERS), row))
             n_novel = r["passed"] + r["filter"] + r["blacklist"] + r["robots"]
             out.append(
                 (

@@ -37,21 +37,10 @@ never re-reads committed state to decide continuation — it calls
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-_TIMING = os.environ.get("SPARK_GRAFT_WAVE_TIMING") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    t1 = time.time()
-    if _TIMING:
-        print(f"[wave-timing] {label}: {t1 - t0:.2f}s", flush=True)
-    return t1
 
 from ..config import BATCH_SIZE
 from ..functions.udfs import canonicalize
@@ -74,6 +63,8 @@ from ..operators.filters import (
     mustmatch_verdict,
     robots_verdict,
 )
+from ..session import local_frame
+from ..sources.statestore import SCHEMAS
 
 # canonical within-wave order of candidate links (SURVEY.md §5):
 # parents in frontier canonical order, links in span-offset order
@@ -123,7 +114,8 @@ class WaveResult:
         """One metrics row for the wave (A2) — call after resolve()'s
         precondition holds (a sink write ran)."""
         c = self.resolve()
-        return self.frontier.sparkSession.createDataFrame(
+        return local_frame(
+            self.frontier.sparkSession,
             [
                 (
                     self.crawl_id, self.depth, c["extracted"], c["parsed_ok"],
@@ -132,9 +124,7 @@ class WaveResult:
                     c["rejected_robots"], c["accepted"], c["do_index"],
                 )
             ],
-            "crawl_id string, depth int, extracted long, parsed_ok long, "
-            "deduped_session long, deduped_persistent long, rejected_filter long, "
-            "rejected_blacklist long, rejected_robots long, accepted long, do_index long",
+            SCHEMAS["crawl_metrics"],
         )
 
     def unpersist(self) -> None:
@@ -225,7 +215,6 @@ def run_wave(
             F.count(F.when(F.col("_dom").isin("text", "all"), 1)).alias("after_f1"),
         )
     )
-    _t = time.time()
 
     after_f1 = (
         c.filter(F.col("_dom").isin("text", "all"))
@@ -314,7 +303,6 @@ def run_wave(
         )
         .persist()
     )
-    _t = _tick("dedup+filters plan", _t)
     rejected = flagged.filter(F.col("reason") != "pass")
     passed = flagged.filter(F.col("reason") == "pass").drop("reason")
 
@@ -377,7 +365,6 @@ def run_wave(
         )
         .persist()
     )
-    _t = _tick("batch+shard+politeness plan", _t)
 
     frontier = kept.select(
         "crawl_id", "url", "url_id", "depth", "lane", "do_index",

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -55,3 +56,29 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A frame of rows the driver already holds, as a JVM LocalRelation.
+
+    `createDataFrame(list_of_tuples)` pickles the rows into an RDD, so
+    every job that broadcasts or writes the frame runs tasks over it.
+    An Arrow table instead crosses to the JVM once, at plan build, and
+    lands as a LocalRelation: a broadcast of it collects nothing and a
+    write of it scans no RDD. The pyarrow.Table input takes the Arrow
+    path unconditionally (no fallback to pickling, zero rows
+    included)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), fl.type) for c, fl in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -12,16 +12,23 @@ multi-table transactions via the REST catalog). The Iceberg runtime
 jars are not in this image, so this module implements the same
 snapshot semantics over parquet directly:
 
-    {root}/{table}/commit={n}/part-*.parquet     data files
-    {root}/_snapshots/v{n:06d}.json              manifest (atomic rename)
+    {root}/{table}/commit={n}/{attempt}/part-*.parquet   data files
+    {root}/_snapshots/v{n:06d}.json                      manifest
+    {root}/_filters/{crawl}-v{n:06d}-{attempt}.bloom     seen filters
 
-A manifest lists, per table, the commit-dirs that make up the table at
-that version plus arbitrary checkpoint metadata. Data dirs are inert
-until a manifest references them, so a crash mid-commit leaves only
-ignorable orphans — same recovery contract as Iceberg. Readers scan
-`{table}/` with partition discovery on `commit` and filter to the
-manifest's commit list: Spark partition pruning skips uncommitted
-dirs without listing their files. Reads apply the declared SCHEMAS
+A manifest lists, per table, the commit versions that make up the
+table at that version, the write attempt that published each version
+(`attempts`), plus arbitrary checkpoint metadata. Every `begin()` is
+its own attempt with its own data dirs, so a retry after a crash
+mid-commit, or a second writer of the same version, never collides
+with the first attempt's files. Data dirs are inert until a manifest
+references them, so a crash mid-commit leaves only ignorable orphans —
+same recovery contract as Iceberg. The manifest is published with an
+exclusive create: of two writers that began from the same base, the
+second `finalize()` raises `CommitConflict` instead of replacing the
+first one's snapshot. Readers scan only the
+data dirs the manifest names, so unpublished attempts are never
+listed. Reads apply the declared SCHEMAS
 instead of inferring the schema from parquet footers (no Spark job per
 read); every append/replace is checked against the same SCHEMAS.
 
@@ -35,6 +42,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +57,12 @@ f = T.StructField
 def _safe_name(s: str) -> str:
     """Filesystem-safe filter-file stem for a crawl id."""
     return "".join(c if c.isalnum() or c in "-._" else "_" for c in s)
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published the snapshot version this commit was
+    staged for."""
+
 
 SCHEMAS: dict[str, T.StructType] = {
     "frontier": S(
@@ -182,28 +196,36 @@ class StateStore:
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
         if v == 0:
-            return {"version": 0, "tables": {}, "meta": {}}
+            return {"version": 0, "tables": {}, "attempts": {}, "meta": {}}
         with open(os.path.join(self._snapdir(), f"v{v:06d}.json")) as fh:
             return json.load(fh)
 
     # ---- read ------------------------------------------------------
     def read(self, table: str, version: int | None = None) -> DataFrame:
         man = self.manifest(version)
-        return self._read_commits(table, man["tables"].get(table, []))
+        return self._read_commits(table, man["tables"].get(table, []), man["attempts"])
 
-    def _read_commits(self, table: str, commits: list[int]) -> DataFrame:
+    def _commit_dir(self, table: str, commit: int, attempts: dict) -> str:
+        """Data dir of `table` at `commit`: the publishing attempt's
+        own dir."""
+        return os.path.join(
+            self.root, table, f"commit={commit}", attempts[str(commit)]
+        )
+
+    def _read_commits(
+        self, table: str, commits: list[int], attempts: dict
+    ) -> DataFrame:
         """Schema-on-read scan of `table`'s commit dirs: the declared
         SCHEMAS entry replaces parquet footer inference, so building
         the DataFrame starts no Spark job (PendingCommit guards every
         write against the same schema)."""
         if not commits:
             return self.spark.createDataFrame([], SCHEMAS[table])
-        tdir = os.path.join(self.root, table)
-        # partition discovery on commit=N + pruning filter
+        # partition discovery on commit=N (attempt dirs carry no '=')
         df = (
             self.spark.read.schema(SCHEMAS[table])
-            .option("basePath", tdir)
-            .parquet(*[os.path.join(tdir, f"commit={c}") for c in commits])
+            .option("basePath", os.path.join(self.root, table))
+            .parquet(*[self._commit_dir(table, c, attempts) for c in commits])
         )
         return df.drop("commit")
 
@@ -216,10 +238,9 @@ class StateStore:
         the same number comes from the snapshot's manifest
         `total-files-size` summary."""
         man = self.manifest(version)
-        tdir = os.path.join(self.root, table)
         total = 0
         for c in man["tables"].get(table, []):
-            cdir = os.path.join(tdir, f"commit={c}")
+            cdir = self._commit_dir(table, c, man["attempts"])
             for dirpath, _dirs, files in os.walk(cdir):
                 for f in files:
                     try:
@@ -285,17 +306,18 @@ class StateStore:
         return d
 
     def write_seen_filter(
-        self, crawl_id: str, bloom, n: int, capacity: int, version: int
+        self, crawl_id: str, bloom, n: int, capacity: int, pc: "PendingCommit"
     ) -> dict:
-        """Persist `bloom` for `crawl_id`; returns the manifest meta
-        entry the caller must place under meta['seen_filters']."""
+        """Persist `bloom` for `crawl_id` as part of the pending commit
+        `pc`; returns the manifest meta entry the caller must place
+        under meta['seen_filters']. The file is named after `pc`'s
+        attempt and created exclusively, so a writer that loses the
+        race for a version never touches the winner's filter."""
         from ..functions.bloom import to_bytes
 
-        fname = f"{_safe_name(crawl_id)}-v{version:06d}.bloom"
-        tmp = os.path.join(self._filterdir(), f".tmp_{fname}")
-        with open(tmp, "wb") as fh:
+        fname = f"{_safe_name(crawl_id)}-v{pc.version:06d}-{pc.attempt}.bloom"
+        with open(os.path.join(self._filterdir(), fname), "xb") as fh:
             fh.write(to_bytes(bloom))
-        os.rename(tmp, os.path.join(self._filterdir(), fname))
         return {"file": fname, "n": int(n), "capacity": int(capacity)}
 
     def load_seen_filter(self, crawl_id: str):
@@ -344,13 +366,16 @@ class StateStore:
         commits, so across a compaction logically-unchanged rows
         report as removed+added — the same contract Iceberg's
         changelog has across rewrite_data_files."""
-        a = set(self.manifest(v_from)["tables"].get(table, []))
-        b = set(self.manifest(v_to)["tables"].get(table, []))
+        man_a, man_b = self.manifest(v_from), self.manifest(v_to)
+        a = set(man_a["tables"].get(table, []))
+        b = set(man_b["tables"].get(table, []))
+        # a published version's attempt never changes: one map serves both
+        attempts = {**man_a["attempts"], **man_b["attempts"]}
 
-        added = self._read_commits(table, sorted(b - a)).withColumn(
+        added = self._read_commits(table, sorted(b - a), attempts).withColumn(
             "change", F.lit("added")
         )
-        removed = self._read_commits(table, sorted(a - b)).withColumn(
+        removed = self._read_commits(table, sorted(a - b), attempts).withColumn(
             "change", F.lit("removed")
         )
         return added.unionByName(removed)
@@ -377,20 +402,33 @@ class StateStore:
         return expired
 
     def rollback_orphans(self) -> None:
-        """Drop data dirs not referenced by any manifest (crash debris)."""
-        referenced: dict[str, set[int]] = {}
+        """Drop data dirs not referenced by any manifest (crash debris):
+        whole commit dirs no manifest lists, and the attempts beside the
+        published one in a commit dir that a manifest does list. Not
+        safe against a writer still in flight."""
+        # table -> {commit: its published attempt}
+        referenced: dict[str, dict[int, str]] = {}
         for v in self.versions():
-            for t, cs in self.manifest(v)["tables"].items():
-                referenced.setdefault(t, set()).update(cs)
+            man = self.manifest(v)
+            for t, cs in man["tables"].items():
+                for c in cs:
+                    referenced.setdefault(t, {})[c] = man["attempts"][str(c)]
         for t in SCHEMAS:
             tdir = os.path.join(self.root, t)
             if not os.path.isdir(tdir):
                 continue
+            live = referenced.get(t, {})
             for name in os.listdir(tdir):
-                if name.startswith("commit="):
-                    c = int(name.split("=", 1)[1])
-                    if c not in referenced.get(t, set()):
-                        shutil.rmtree(os.path.join(tdir, name))
+                if not name.startswith("commit="):
+                    continue
+                cdir = os.path.join(tdir, name)
+                c = int(name.split("=", 1)[1])
+                if c not in live:
+                    shutil.rmtree(cdir)
+                else:
+                    for attempt in os.listdir(cdir):
+                        if attempt != live[c]:
+                            shutil.rmtree(os.path.join(cdir, attempt))
         # filter files not referenced by any surviving manifest
         fdir = os.path.join(self.root, "_filters")
         if os.path.isdir(fdir):
@@ -422,18 +460,22 @@ class StateStore:
 
 class PendingCommit:
     """A multi-table commit in flight (from `StateStore.begin`).
-    Writes land as data dirs immediately; the manifest — and therefore
-    visibility — appears only at `finalize()` (atomic rename). A crash
-    before finalize leaves orphan dirs that `rollback_orphans` drops."""
+    Writes land immediately in this attempt's own data dirs; the
+    manifest — and therefore visibility — appears only at `finalize()`.
+    A crash before finalize leaves orphan dirs that `rollback_orphans`
+    drops; a retry (the next `begin()`) writes beside them."""
 
     def __init__(self, store: StateStore, prev_manifest: dict, version: int):
         self.store = store
         self.version = version
+        self.attempt = uuid.uuid4().hex
         self.tables = {t: list(cs) for t, cs in prev_manifest["tables"].items()}
+        self.attempts = dict(prev_manifest["attempts"])
 
     def _write(self, table: str, df: DataFrame) -> None:
         _check_schema(table, df)
-        path = os.path.join(self.store.root, table, f"commit={self.version}")
+        self.attempts[str(self.version)] = self.attempt
+        path = self.store._commit_dir(table, self.version, self.attempts)
         df.coalesce(self.store.write_partitions).write.mode(
             "errorifexists"
         ).parquet(path)
@@ -447,12 +489,31 @@ class PendingCommit:
         self.tables[table] = [self.version]
 
     def finalize(self, meta: dict | None = None) -> int:
-        man = {"version": self.version, "tables": self.tables, "meta": meta or {}}
+        """Publish the manifest, or raise `CommitConflict` when another
+        writer already published this version (this attempt's data
+        dirs then stay unreferenced)."""
+        live = {str(c) for cs in self.tables.values() for c in cs}
+        man = {
+            "version": self.version,
+            "tables": self.tables,
+            "attempts": {v: a for v, a in self.attempts.items() if v in live},
+            "meta": meta or {},
+        }
         snapdir = self.store._snapdir()
-        tmp = os.path.join(snapdir, f".tmp_v{self.version:06d}.json")
+        name = f"v{self.version:06d}.json"
+        tmp = os.path.join(snapdir, f".tmp_{self.attempt}_{name}")
         with open(tmp, "w") as fh:
             json.dump(man, fh)
-        os.rename(tmp, os.path.join(snapdir, f"v{self.version:06d}.json"))
+        try:
+            # exclusive create: a link fails where a rename would replace
+            os.link(tmp, os.path.join(snapdir, name))
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot version {self.version} under {self.store.root} "
+                "was published by another writer"
+            ) from None
+        finally:
+            os.remove(tmp)
         return self.version
 
 

@@ -349,3 +349,49 @@ def test_profiles_dimension_is_a_local_relation(spark):
         rows = df.collect()
         assert [r["crawl_id"] for r in rows] == list(profiles)
     assert rows == [] and df.columns[0] == "crawl_id"
+
+
+def test_tier_dedup_is_per_crawl(spark, two_corpora, tmp_path_factory):
+    """Two crawls of the SAME seed with different profiles share one
+    depth-0 tier (a k > 1 wave): the in-wave dedup and the seen
+    anti-join are keyed per crawl, so url_seen holds the seed once per
+    crawl and both frontiers hold it. A tier plan that lost crawl_id
+    from its dedup keys would keep one of the two rows."""
+    from datetime import datetime, timezone
+
+    from yacy_grid_crawler_spark.functions.urlnorm import url_id
+
+    a, _b, docs_df, robots_df, rules = two_corpora
+    job = CrawlJob(spark, str(tmp_path_factory.mktemp("same_seed")), docs_df,
+                   blacklist=rules, robots=robots_df, n_shards=8)
+    seed = a.seeds[0].split("|")[0]
+    (c1,) = job.start(seed, {"crawlingDepth": 1},
+                      now=datetime(2020, 1, 1, tzinfo=timezone.utc))
+    (c2,) = job.start(seed, {"crawlingDepth": 2, "collection": "user,extra"},
+                      now=datetime(2020, 1, 2, tzinfo=timezone.utc))
+    assert c1 != c2
+    job.step_all([c1, c2])
+    seed_id = url_id(job.profiles[c1]["start_url"])
+    want = [(c1, seed_id), (c2, seed_id)]
+    assert _table_state(job, "url_seen", ("crawl_id", "url_id")) == sorted(want)
+    assert _table_state(job, "frontier", ("crawl_id", "url_id")) == sorted(want)
+
+
+def test_run_concurrent_keeps_state_bounded(spark, two_corpora, tmp_path_factory):
+    """run_concurrent maintains the store on run()'s cadence (every
+    COMPACT_EVERY tiers and once at the end): afterwards the store holds
+    at most maintain()'s keep_snapshots (2) manifests, like after run(),
+    and the crawl state still equals the sequential run's."""
+    a, b, docs_df, robots_df, rules = two_corpora
+    seeds_depths = [(a.seeds[0], 1), (b.seeds[0], 1)]
+    seq, _ = _crawl(
+        spark, str(tmp_path_factory.mktemp("bounded_seq")), docs_df, robots_df,
+        rules, seeds_depths, concurrent=False,
+    )
+    con, _ = _crawl(
+        spark, str(tmp_path_factory.mktemp("bounded_con")), docs_df, robots_df,
+        rules, seeds_depths, concurrent=True,
+    )
+    for job in (seq, con):
+        assert len(job.store.versions()) <= 2, job.store.versions()
+    _assert_same_state(seq, con)

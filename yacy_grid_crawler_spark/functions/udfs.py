@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .urlnorm import canonicalize_series, content_domain_series, smart_sld
+from .urlnorm import canonicalize_series, smart_sld
 
 
 @F.pandas_udf(T.StringType())
@@ -31,31 +31,6 @@ def canonicalize(urls: pd.Series) -> pd.Series:
     CrawlerListener.java:277-292, 308). Vectorized fast-gate +
     scalar-spec fallback (urlnorm.canonicalize_series)."""
     return canonicalize_series(urls)
-
-
-_CANON_DOMAIN_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("domain", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_CANON_DOMAIN_SCHEMA)
-def canonicalize_with_domain(urls: pd.Series) -> pd.DataFrame:
-    """Fused P2+F1 kernel: one Arrow pass computing the normal form AND
-    its content domain — halves the Python round-trips on the hottest
-    path (every candidate URL of every wave)."""
-    canon = canonicalize_series(urls)
-    dom = content_domain_series(canon)
-    return pd.DataFrame({"url": canon, "domain": dom})
-
-
-@F.pandas_udf(T.StringType())
-def classify_content_domain(urls: pd.Series) -> pd.Series:
-    """'text'|'image'|'audio'|'video'|'app'|'all' by extension (F1,
-    CrawlerListener.java:304-306). Input must already be canonical."""
-    return content_domain_series(urls)
 
 
 @F.pandas_udf(T.StringType())

@@ -434,6 +434,48 @@ def tier2_fix_jvm(url_col):
     head = F.substring_index(base, "/", 3)  # scheme://host
     rest = base.substr(F.length(head) + F.lit(1), F.length(base))
     return F.concat(F.lower(head), rest)
+
+
+def canonicalize_gated(df, raw: str = "url_raw", out: str = "url"):
+    """P2 canonicalize of column `raw` into `out` (None for malformed)
+    behind the two JVM gates: tier-1 rows (FAST_CANONICAL_PATTERN) are
+    already canonical, tier-2 rows are repaired by tier2_fix_jvm, and
+    only the residue (ports, dot-segments, pct-encoding, querystrings...)
+    pays the Arrow round trip to the `canonicalize` kernel — its input
+    is nulled for gated rows, so the transfer carries mostly null
+    bitmaps. Equal to canonicalize_url on every row (tests/test_urlnorm.py,
+    the wave oracle)."""
+    from pyspark.sql import functions as F
+
+    from .udfs import canonicalize
+
+    # `_fast` rides through the Arrow barrier as a real column so the
+    # many downstream consumers of `url` reference cheap attributes —
+    # inlining the gate regex into the coalesce would re-evaluate it
+    # once per consumer (filter predicates get no subexpression
+    # elimination)
+    fast = F.regexp_like(F.col(raw), F.lit(FAST_CANONICAL_PATTERN))
+    t2 = ~F.col("_fast") & F.regexp_like(F.col(raw), F.lit(TIER2_CANONICAL_PATTERN_JVM))
+    return (
+        df.withColumn("_fast", fast)
+        .withColumn("_t2", t2)
+        .withColumn(
+            "_slow",
+            canonicalize(
+                F.when(F.col("_fast") | F.col("_t2"), F.lit(None).cast("string"))
+                .otherwise(F.col(raw))
+            ),
+        )
+        .withColumn(
+            out,
+            F.coalesce(
+                F.col("_slow"),
+                F.when(F.col("_fast"), F.col(raw))
+                .when(F.col("_t2"), tier2_fix_jvm(F.col(raw))),
+            ),
+        )
+        .drop("_fast", "_t2", "_slow")
+    )
 # content-domain extension sniff shared with the JVM the same way
 EXT_PATTERN = r"^[a-z]+://[^?]*/[^/?]*\.([A-Za-z0-9]{1,5})(?:\?|$)"
 

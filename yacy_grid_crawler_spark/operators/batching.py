@@ -32,18 +32,19 @@ second shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import BATCH_SIZE
 
 
-def assign_lane(df: DataFrame, priority: int) -> DataFrame:
+def assign_lane(df: DataFrame, priority: Column) -> DataFrame:
     """G4 — lane from the profile's priority int
-    (CrawlerListener.java:62-76, 217)."""
+    (CrawlerListener.java:62-76, 217); a literal priority folds to a
+    literal lane."""
     return df.withColumn(
-        "lane", F.lit("priority" if int(priority) > 0 else "normal")
+        "lane", F.when(priority > 0, "priority").otherwise("normal")
     )
 
 
@@ -349,18 +350,6 @@ def asset_columns(
         df.withColumn("warc_asset", path("warc", ".warc.gz", archive_warc))
         .withColumn("index_asset", path("index", ".index.jsonlist", archive_index))
         .withColumn("graph_asset", path("graph", ".graph.jsonlist", archive_graph))
-    )
-
-
-def canonical_order(df: DataFrame) -> DataFrame:
-    """G5 — the canonical total order for output/equality tests."""
-    return df.orderBy(
-        "crawl_id",
-        "depth",
-        F.when(F.col("lane") == "priority", 0).otherwise(1),
-        (1 - F.col("do_index").cast("int")),
-        "batch_no",
-        "batch_pos",
     )
 
 

@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import classify_content_domain
-
 
 def anchored(pattern: str) -> str:
     """Java Matcher.matches() ≡ rlike with explicit anchors."""
@@ -28,13 +26,6 @@ def anchored(pattern: str) -> str:
 def full_match(col: Column, pattern: str) -> Column:
     """JVM-side anchored regex match (whole-stage codegen; no Python)."""
     return col.rlike(anchored(pattern))
-
-
-def content_domain_col(url_col: Column) -> Column:
-    """F1 — 'text'|'image'|...|'all' via the Arrow kernel (spec-exact;
-    CrawlerListener.java:304-306). For SQL-expressible variants see
-    content_domain_sql()."""
-    return classify_content_domain(url_col)
 
 
 # spec-exact JVM classification over an already-CANONICAL url — the
@@ -93,11 +84,6 @@ def content_domain_sql(url_col: Column) -> Column:
         .when(ext.isin(sorted(APP_EXTS)), F.lit("app"))
         .otherwise(F.lit("all"))
     )
-
-
-def apply_content_domain_filter(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """F1 — keep only TEXT or ALL (CrawlerListener.java:304-306)."""
-    return df.filter(content_domain_col(F.col(url_col)).isin("text", "all"))
 
 
 def mustmatch_verdict(url_col: Column, mustmatch: str, mustnotmatch: str) -> Column:

@@ -23,15 +23,106 @@ from __future__ import annotations
 from datetime import datetime, timezone
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import build_crawl_start, make_profile
+from ..operators.batching import global_positions
 from ..operators.blacklist import BlacklistRule
+from ..operators.dedup import _pack_order
 from ..operators.seeds import split_seeds
 from ..session import local_frame
 from ..sources.statestore import SCHEMAS, StateStore
-from .wave import run_wave
+from . import multiwave
+from .wave import CANON_ORDER, observed
+from .wave import run_wave  # noqa: F401 — public name; perfbench traces crawl_job.run_wave
+
+# waves (run) or tiers (run_concurrent) between the drivers' maintain()
+# passes; also maintain()'s compaction threshold
+COMPACT_EVERY = 16
+
+
+class _WaveCap:
+    """The wave-size cap of one crawl's `step` (CrawlJob `max_wave_urls`):
+    a wave consumes only the first `limit` candidates in canonical
+    candidate order; the remainder is re-derived next wave from the SAME
+    committed depth-1 frontier and skipped up to the persisted
+    packed-order cursor — a value comparison, so the skip is a codegen
+    filter, not a rank. Batch numbering continues via base positions,
+    fetch slots via the cross-wave host_slots budget, and the
+    within-depth seen/status dedup via the committed url_seen — so a
+    capped run converges to the exact uncapped final state. With no
+    limit it only clears a stale cursor."""
+
+    def __init__(self, cid: str, depth: int, limit: int | None, cursor: dict | None):
+        self.cid, self.depth, self.limit = cid, depth, limit
+        # the cursor of a prior capped sub-wave of THIS depth, if any
+        resuming = bool(cursor) and int(cursor.get("depth", -1)) == depth
+        self.cursor = cursor if resuming else None
+        self.obs = Observation()
+        self.caches: list = []
+        self.has_more = False
+        self.depth_accepted = 0
+
+    def take(self, candidates: DataFrame, store) -> tuple[DataFrame, DataFrame | None]:
+        """The candidates this wave consumes, and the per-group batch
+        position bases of the depth's prior sub-waves (or None)."""
+        if not self.limit:
+            return candidates, None
+        candidates = candidates.withColumn("_pk", _pack_order(CANON_ORDER))
+        if self.cursor:
+            candidates = candidates.filter(F.col("_pk") > int(self.cursor["after"]))
+        # first `limit` rows of the remainder in canonical order:
+        # distributed two-phase rank (no single-partition window); the
+        # remaining-count and last-consumed-key observations ride the
+        # wave's own action — zero extra jobs
+        candidates = global_positions(
+            candidates, group_cols=(), order_cols=("_pk",),
+            out="_cpos", cache_registry=self.caches,
+        )
+        candidates = (
+            candidates.observe(
+                self.obs,
+                F.count(F.lit(1)).alias("remaining"),
+                F.max(F.when(F.col("_cpos") < self.limit, F.col("_pk"))).alias("last_pk"),
+            )
+            .filter(F.col("_cpos") < self.limit)
+            .drop("_cpos", "_pk")
+        )
+        if not self.cursor:
+            return candidates, None
+        # continue batch numbering where the prior sub-wave of this
+        # depth stopped (tiny aggregate, broadcast join)
+        base_positions = (
+            store.read("frontier")
+            .filter((F.col("crawl_id") == self.cid) & (F.col("depth") == self.depth))
+            .groupBy("crawl_id", "do_index")
+            .agg(F.count(F.lit(1)).cast("long").alias("_base_pos"))
+        )
+        return candidates, base_positions
+
+    def commit_meta(self, meta: dict, accepted: int) -> None:
+        """After the wave ran: keep the crawl at this depth while
+        candidates remain, and set or clear its cursor in `meta`."""
+        self.depth_accepted = accepted + (
+            int(self.cursor.get("depth_accepted", 0)) if self.cursor else 0
+        )
+        got = observed(self.obs) if self.limit else {}
+        self.has_more = int(got.get("remaining") or 0) > (self.limit or 0)
+        cursors = meta.setdefault("wave_cursors", {})
+        if self.has_more:
+            meta["next_depth"][self.cid] = self.depth
+            cursors[self.cid] = {
+                "depth": self.depth,
+                "after": int(got["last_pk"]),
+                "depth_accepted": self.depth_accepted,
+            }
+        else:
+            cursors.pop(self.cid, None)
+
+    def unpersist(self) -> None:
+        for df in self.caches:
+            df.unpersist()
 
 
 class CrawlJob:
@@ -300,26 +391,14 @@ class CrawlJob:
         from ..functions.bloom import UrlBloom, fold_into
 
         delta = delta.select("url_id")
-        ent = self._seen_filters.get(cid)
-        bootstrap = False
-        if ent is None:
-            loaded = self.store.load_seen_filter(cid)
-            if loaded is not None:
-                bloom0, m = loaded
-                ent = [bloom0, m["n"], m["capacity"]]
-            else:
-                # no snapshot: prior committed seen rows (if any) must
-                # be folded in, not just this wave's delta
-                bootstrap = True
-                prior = (
-                    self.store.read("url_seen")
-                    .filter(F.col("crawl_id") == cid)
-                    .select("url_id")
-                )
-                n_prior = prior.count()
-                cap = max(1 << 17, 4 * (n_prior + n_delta))
-                ent = [UrlBloom(cap, fpp=0.01), n_prior, cap]
-        bloom, n, cap = ent
+        bootstrap = self._load_seen_filter(cid) is None
+        if bootstrap:
+            # no snapshot: prior committed seen rows (if any) must be
+            # folded in, not just this wave's delta
+            n = self.store.read("url_seen").filter(F.col("crawl_id") == cid).count()
+            cap = max(1 << 17, 4 * (n + n_delta))
+        else:
+            bloom, n, cap = self._seen_filters[cid]
         n += n_delta
         if bootstrap or n > 0.8 * cap:
             if n > 0.8 * cap:
@@ -408,15 +487,14 @@ class CrawlJob:
         return out
 
     # ------------------------------------------------------------------
-    def _base_slots(self, cid: str | None = None):
+    def _base_slots(self, cids: list[str]):
         """Cumulative per-host fetch-slot bases from the log-structured
-        host_slots table (sum of per-wave appends)."""
+        host_slots table (sum of per-wave appends); a one-crawl tier
+        reads only its crawl's rows."""
         hs = self.store.read("host_slots")
-        if cid is not None:
-            hs = hs.filter(F.col("crawl_id") == cid)
-        return hs.groupBy("crawl_id", "host").agg(
-            F.sum("n").alias("next_slot")
-        )
+        if len(cids) == 1:
+            hs = hs.filter(F.col("crawl_id") == cids[0])
+        return hs.groupBy("crawl_id", "host").agg(F.sum("n").alias("next_slot"))
 
     # --- bucketed seen mirror (auto past threshold; see __init__) ----
 
@@ -518,12 +596,14 @@ class CrawlJob:
         self._write_mirror_marker(v, n)
         self._mirror_version = v
 
-    def _seen_inputs(self, cid: str | None = None):
-        """The wave's two persistent dedup inputs (url_seen slice,
-        crawl_status url_ids) — from the bucketed mirror when enabled
-        (seen-side Exchange drops from the D2/D3 anti-joins), else
-        straight from the snapshot store. Contents are identical
-        either way (equality pinned in test_wave_oracle)."""
+    def _seen_inputs(self, cids: list[str]):
+        """The wave's two persistent dedup inputs (url_seen — only the
+        crawl's own rows for a one-crawl tier, whose seen anti-join is
+        keyed on bare url_id — and ALL crawl_status url_ids) — from the
+        bucketed mirror when enabled (seen-side Exchange drops from the
+        D2/D3 anti-joins), else straight from the snapshot store.
+        Contents are identical either way (equality pinned in
+        test_wave_oracle)."""
         if self._bucketed_enabled():
             self._refresh_mirror()
             seen = self.spark.table(self._mirror_tables["url_seen"])
@@ -533,8 +613,8 @@ class CrawlJob:
         else:
             seen = self.store.read("url_seen")
             status_ids = self.store.read("crawl_status").select("url_id")
-        if cid is not None:
-            seen = seen.filter(F.col("crawl_id") == cid)
+        if len(cids) == 1:
+            seen = seen.filter(F.col("crawl_id") == cids[0])
         return seen, status_ids
 
     def _mirror_append(self, version: int, seen_delta, status_delta) -> None:
@@ -588,105 +668,43 @@ class CrawlJob:
             return prev_accepted is not None and prev_accepted * 8 > 200_000
         return bool(self.distributed_rank)
 
-    def step(self, cid: str, max_wave_urls: int | None = None) -> bool:
-        """Run one wave for crawl `cid`. Returns False when the crawl
-        is finished (depth gate F5 or empty frontier).
-
-        With a wave-size cap (`max_wave_urls` here, or the job-level
-        default), a wave consumes only the first N candidates in
-        canonical candidate order; the remainder is re-derived next
-        wave from the SAME committed depth-1 frontier and skipped up to
-        the persisted packed-order cursor — a value comparison, so the
-        skip is a codegen filter, not a rank. Batch numbering continues
-        via base_positions, fetch slots via the cross-wave host_slots
-        budget, and the within-depth seen/status dedup via the
-        committed url_seen — so a capped run converges to the exact
-        uncapped final state."""
-        profile = self.profiles[cid]
-        meta = self.store.manifest().get("meta", {})
-        depth = int(meta.get("next_depth", {}).get(cid, 0))
-        max_depth = int(profile.get("crawlingDepth", 3))
-        if depth > max_depth:  # F5 depth gate (CrawlerListener.java:215-224)
-            return False
-        candidates = self._candidates({cid: depth}).drop("crawl_id", "depth")
-        if depth > 0 and candidates.isEmpty():
-            return False
-        cap = max_wave_urls if max_wave_urls is not None else self.max_wave_urls
-        cursor = meta.get("wave_cursors", {}).get(cid)
-        resuming_depth = bool(cursor) and int(cursor.get("depth", -1)) == depth
-        obs_cap = None
-        cap_caches: list = []
+    def _tier(
+        self, depths: dict[str, int], cap: _WaveCap | None = None, seen_filter=None
+    ) -> dict[str, int]:
+        """Run ONE wave for the crawls of `depths` ({crawl_id: depth}) —
+        a tier of k crawls, k = 1 for `step` — and commit it as one
+        snapshot. The candidates of all crawls come from one builder
+        call (one frontier scan and one docs join for the whole tier);
+        the plan is plans/wave.py's, literals for k = 1 and a broadcast
+        profile dimension for k > 1. Returns {crawl_id: accepted} of the
+        crawls that had candidates."""
+        cids = list(depths)
+        candidates = self._candidates(depths)
         base_positions = None
-        if cap:
-            from pyspark.sql import Observation
-
-            from ..operators.batching import global_positions
-            from ..operators.dedup import _pack_order
-            from .wave import CANON_ORDER
-
-            candidates = candidates.withColumn("_pk", _pack_order(CANON_ORDER))
-            if resuming_depth:
-                candidates = candidates.filter(
-                    F.col("_pk") > int(cursor["after"])
-                )
-            # first `cap` rows of the remainder in canonical order:
-            # distributed two-phase rank (no single-partition window);
-            # the remaining-count and last-consumed-key observations
-            # ride the wave's own action — zero extra jobs
-            candidates = global_positions(
-                candidates, group_cols=(), order_cols=("_pk",),
-                out="_cpos", cache_registry=cap_caches,
-            )
-            obs_cap = Observation()
-            candidates = (
-                candidates.observe(
-                    obs_cap,
-                    F.count(F.lit(1)).alias("remaining"),
-                    F.max(
-                        F.when(F.col("_cpos") < cap, F.col("_pk"))
-                    ).alias("last_pk"),
-                )
-                .filter(F.col("_cpos") < cap)
-                .drop("_cpos", "_pk")
-            )
-            if resuming_depth:
-                # continue batch numbering where the prior sub-wave of
-                # this depth stopped (tiny aggregate, broadcast join)
-                base_positions = (
-                    self.store.read("frontier")
-                    .filter(
-                        (F.col("crawl_id") == cid) & (F.col("depth") == depth)
-                    )
-                    .groupBy("crawl_id", "do_index")
-                    .agg(F.count(F.lit(1)).cast("long").alias("_base_pos"))
-                )
-        seen, status_ids = self._seen_inputs(cid)
-        base_slots = self._base_slots(cid)
-        seen_filter = self._load_seen_filter(cid) if self.checkpoint_filters else None
+        if cap is not None:
+            candidates, base_positions = cap.take(candidates, self.store)
+        seen, status_ids = self._seen_inputs(cids)
         wave_start_ms = self._wave_start_ms()
-        res = run_wave(
-            candidates,
-            profile,
-            seen=seen,
-            status_ids=status_ids,
-            depth=depth,
-            blacklist=self.blacklist,
-            robots=self.robots,
-            n_shards=self.n_shards,
-            use_bloom=self.use_bloom,
-            distributed_rank=self._rank_mode(self._prev_accepted.get(cid)),
+        res = multiwave.run_wave_multi(
+            candidates, {c: self.profiles[c] for c in cids}, depths,
+            seen=seen, status_ids=status_ids,
+            blacklist=self.blacklist, robots=self.robots,
+            n_shards=self.n_shards, use_bloom=self.use_bloom,
+            distributed_rank=self._rank_mode(
+                sum(self._prev_accepted.get(c, 0) for c in cids) or None
+            ),
             hot_host_threshold=self.hot_host_threshold,
-            base_slots=base_slots,
-            seen_filter=seen_filter,
             wave_start_ms=wave_start_ms,
+            base_slots=self._base_slots(cids),
+            seen_filter=seen_filter,
             base_positions=base_positions,
             indexer_blacklist=self.indexer_blacklist,
         )
         # Staged commit: the status write is the ONE action that
         # materializes the whole wave plan (it unions the rejected and
-        # accepted branches), firing every observe() counter; frontier
-        # and seen then reuse the persisted stages, and the metrics row
-        # is built driver-side from the observations — zero extra jobs.
+        # accepted branches); frontier and seen then reuse the persisted
+        # stages. The metrics rows come from the observe() counters
+        # (k = 1, zero jobs) or one grouped job (k > 1).
         pc = self.store.begin()
         pc.append("crawl_status", res.status)
         pc.append("frontier", res.frontier)
@@ -699,55 +717,67 @@ class CrawlJob:
                 F.count(F.lit(1)).alias("n")
             ),
         )
-        counts = res.resolve()
         pc.append("crawl_metrics", res.metrics_df())
-        # carry-over bookkeeping: the cap observations resolved with
-        # the same action that fired the wave counters
-        has_more = False
-        next_cursor = None
-        depth_accepted = counts["accepted"] + (
-            int(cursor.get("depth_accepted", 0)) if resuming_depth else 0
-        )
-        if obs_cap is not None:
-            capd = obs_cap.get
-            remaining = int(capd.get("remaining") or 0)
-            has_more = remaining > cap
-            if has_more:
-                next_cursor = {
-                    "depth": depth,
-                    "after": int(capd["last_pk"]),
-                    "depth_accepted": depth_accepted,
-                }
-        meta = self._meta({cid: depth if has_more else depth + 1})
-        wc = meta.setdefault("wave_cursors", {})
-        if next_cursor is not None:
-            wc[cid] = next_cursor
-        else:
-            wc.pop(cid, None)
-        # wave-start provenance: the clock sample that stamped this
-        # wave's lineage docnames and politeness not_before_ms
-        meta.setdefault("wave_starts", {})[cid] = wave_start_ms
-        if self.checkpoint_filters:
-            # novel-row count straight from the wave's observe()
-            # counters: every novel row (accepted or rejected) is a
-            # url_seen delta row (add-before-filter)
-            n_delta = (
-                counts["accepted"]
-                + counts["deduped_persistent"]
-                + counts["rejected_filter"]
-                + counts["rejected_blacklist"]
-                + counts["rejected_robots"]
+        # the same rows give the continue decision and the per-crawl
+        # novel counts: every novel row — accepted or rejected — is a
+        # url_seen delta row (add-before-filter)
+        accepted: dict[str, int] = {}
+        novel: dict[str, int] = {}
+        for r in res.metrics_rows():
+            m = dict(zip(SCHEMAS["crawl_metrics"].names, r))
+            accepted[m["crawl_id"]] = m["accepted"]
+            novel[m["crawl_id"]] = (
+                m["accepted"] + m["deduped_persistent"] + m["rejected_filter"]
+                + m["rejected_blacklist"] + m["rejected_robots"]
             )
-            self._update_seen_filter(cid, pc, meta, res.seen, n_delta)
+        meta = self._meta({c: d + 1 for c, d in depths.items()})
+        for c in cids:
+            # wave-start provenance: the clock sample that stamped this
+            # wave's lineage docnames and politeness not_before_ms
+            meta["wave_starts"][c] = wave_start_ms
+        if cap is not None:
+            cap.commit_meta(meta, accepted.get(cap.cid, 0))
+        if self.checkpoint_filters:
+            # keep the stored blooms covering EVERY committed url_seen
+            # row, whichever driver committed it: a stale filter's
+            # negatives would bypass the exact anti-join in a later
+            # step() — re-crawl duplicates
+            for c in cids:
+                self._update_seen_filter(
+                    c, pc, meta, res.seen.filter(F.col("crawl_id") == c),
+                    novel.get(c, 0),
+                )
         pc.finalize(meta=meta)
         self._mirror_append(pc.version, res.seen, res.status)
         res.unpersist()
-        for df in cap_caches:
-            df.unpersist()
-        self._prev_accepted[cid] = counts["accepted"]
-        if has_more:
+        if cap is not None:
+            cap.unpersist()
+        for c in cids:
+            self._prev_accepted[c] = accepted.get(c, 0)
+        return accepted
+
+    def step(self, cid: str, max_wave_urls: int | None = None) -> bool:
+        """Run one wave for crawl `cid`: the one-crawl tier plus the two
+        things only it has — the wave-size cap with its cursor
+        (`max_wave_urls` here, or the job-level default; see _WaveCap)
+        and the checkpointed seen-filter probe. Returns False when the
+        crawl is finished: depth gate F5, or a depth that accepted
+        nothing (an empty wave commits no rows)."""
+        meta = self.store.manifest().get("meta", {})
+        depth = int(meta.get("next_depth", {}).get(cid, 0))
+        max_depth = int(self.profiles[cid].get("crawlingDepth", 3))
+        if depth > max_depth:  # F5 depth gate (CrawlerListener.java:215-224)
+            return False
+        cap = _WaveCap(
+            cid, depth,
+            max_wave_urls if max_wave_urls is not None else self.max_wave_urls,
+            meta.get("wave_cursors", {}).get(cid),
+        )
+        seen_filter = self._load_seen_filter(cid) if self.checkpoint_filters else None
+        self._tier({cid: depth}, cap=cap, seen_filter=seen_filter)
+        if cap.has_more:
             return True  # same depth continues next wave
-        return depth_accepted > 0 and depth < max_depth
+        return cap.depth_accepted > 0 and depth < max_depth
 
     # log-structured tables that accumulate one commit-dir per wave;
     # read cost grows with commit count until compacted
@@ -755,7 +785,7 @@ class CrawlJob:
 
     def maintain(
         self,
-        max_commits: int = 16,
+        max_commits: int = COMPACT_EVERY,
         keep_snapshots: int = 2,
         seen_ttl_days: float | None = None,
         now_ms: int | None = None,
@@ -840,121 +870,70 @@ class CrawlJob:
             pc = self.store.begin()
             pc.finalize(meta=meta)
 
-    def run(
-        self, crawl_ids: list[str] | None = None, compact_every: int = 16
-    ) -> None:
-        """BFS all waves of the given crawls (default: all known).
-        Every `compact_every` waves the driver runs `maintain()` so
-        commit-dir counts stay bounded on long crawls (0 = never)."""
-        waves = 0
-        for cid in crawl_ids or list(self.profiles):
-            while self.step(cid):
-                waves += 1
-                if compact_every and waves % compact_every == 0:
-                    self.maintain(max_commits=compact_every)
-        if compact_every and waves:
+    def _drive(self, waves, compact_every: int = COMPACT_EVERY) -> None:
+        """Exhaust `waves` (one item per committed wave or tier),
+        running `maintain()` every `compact_every` items and once at the
+        end (0 = never), so commit dirs and manifests stay bounded on
+        long crawls under either driver."""
+        n = 0
+        for _ in waves:
+            n += 1
+            if compact_every and n % compact_every == 0:
+                self.maintain(max_commits=compact_every)
+        if compact_every and n:
             self.maintain(max_commits=compact_every)
+
+    def run(
+        self, crawl_ids: list[str] | None = None, compact_every: int = COMPACT_EVERY
+    ) -> None:
+        """BFS all waves of the given crawls (default: all known), one
+        crawl after the other, with `maintain()` every `compact_every`
+        waves (0 = never)."""
+
+        def waves():
+            for cid in crawl_ids or list(self.profiles):
+                while self.step(cid):
+                    yield
+
+        self._drive(waves(), compact_every)
 
     # ------------------------------------------------------------------
     def step_all(self, crawl_ids: list[str]) -> list[str]:
         """Run ONE tier for every active crawl as a single combined
-        wave (plans/multiwave.py): the candidates of all crawls come
-        from one builder call (one frontier scan and one docs join for
-        the whole tier), profile regexes ride as broadcast columns, and
-        the per-crawl metrics are one grouped job whose collected rows
-        also give the continue decision and the novel counts. Returns
-        the crawl ids still active after the tier."""
-        from .multiwave import profiles_to_df, run_wave_multi
-
-        meta = self.store.manifest().get("meta", {})
-        nd = meta.get("next_depth", {})
+        wave (`_tier`). Returns the crawl ids still active after the
+        tier."""
+        nd = self.store.manifest().get("meta", {}).get("next_depth", {})
+        max_depth = {c: int(self.profiles[c].get("crawlingDepth", 3)) for c in crawl_ids}
         depths = {
-            cid: int(nd.get(cid, 0)) for cid in crawl_ids
-            if int(nd.get(cid, 0)) <= int(self.profiles[cid].get("crawlingDepth", 3))
+            c: int(nd.get(c, 0)) for c in crawl_ids if int(nd.get(c, 0)) <= max_depth[c]
         }
         if not depths:
             return []
-        stepped = list(depths)
-        profiles = profiles_to_df(self.spark, {c: self.profiles[c] for c in stepped})
-        seen, status_ids = self._seen_inputs()
-        wave_start_ms = self._wave_start_ms()
-        res = run_wave_multi(
-            self._candidates(depths), profiles, seen=seen, status_ids=status_ids,
-            blacklist=self.blacklist, robots=self.robots,
-            n_shards=self.n_shards, use_bloom=self.use_bloom,
-            distributed_rank=self._rank_mode(
-                sum(self._prev_accepted.get(c, 0) for c in stepped) or None
-            ),
-            hot_host_threshold=self.hot_host_threshold,
-            base_slots=self._base_slots(),
-            wave_start_ms=wave_start_ms,
-            indexer_blacklist=self.indexer_blacklist,
-        )
-        pc = self.store.begin()
-        pc.append("crawl_status", res.status)
-        pc.append("frontier", res.frontier)
-        pc.append("url_seen", res.seen)
-        pc.append(
-            "host_slots",
-            res.frontier.groupBy("crawl_id", "host").agg(
-                F.count(F.lit(1)).alias("n")
-            ),
-        )
-        metrics_schema = SCHEMAS["crawl_metrics"]
-        rows = res.metrics_rows()
-        pc.append("crawl_metrics", local_frame(self.spark, rows, metrics_schema))
-        meta2 = self._meta({cid: depths[cid] + 1 for cid in stepped})
-        for cid in stepped:
-            meta2.setdefault("wave_starts", {})[cid] = wave_start_ms
-        # the same rows serve the continue decision and (with
-        # checkpoint filters on) the per-crawl novel counts: every
-        # novel row — accepted or rejected — is a url_seen delta row
-        accepted: dict[str, int] = {}
-        novel: dict[str, int] = {}
-        for r in rows:
-            m = dict(zip(metrics_schema.names, r))
-            cid = m["crawl_id"]
-            accepted[cid] = accepted.get(cid, 0) + m["accepted"]
-            novel[cid] = novel.get(cid, 0) + (
-                m["accepted"] + m["deduped_persistent"] + m["rejected_filter"]
-                + m["rejected_blacklist"] + m["rejected_robots"]
-            )
-        if self.checkpoint_filters:
-            # keep the stored blooms covering EVERY committed url_seen
-            # row: a multiwave tier that skipped this would leave a
-            # stale filter whose negatives bypass the exact anti-join
-            # in a later single-crawl step() — re-crawl duplicates
-            for cid in stepped:
-                self._update_seen_filter(
-                    cid,
-                    pc,
-                    meta2,
-                    res.seen.filter(F.col("crawl_id") == cid),
-                    novel.get(cid, 0),
-                )
-        pc.finalize(meta=meta2)
-        self._mirror_append(pc.version, res.seen, res.status)
-        res.unpersist()
-        for cid in stepped:
-            self._prev_accepted[cid] = accepted.get(cid, 0)
+        accepted = self._tier(depths)
         return [
-            cid for cid in stepped
-            if accepted.get(cid, 0) > 0
-            and depths[cid] < int(self.profiles[cid].get("crawlingDepth", 3))
+            c for c, d in depths.items() if accepted.get(c, 0) > 0 and d < max_depth[c]
         ]
 
     def run_concurrent(self, crawl_ids: list[str] | None = None) -> None:
-        """BFS all crawls together, one combined wave per tier.
+        """BFS all crawls together, one combined wave per tier, with
+        run()'s maintenance cadence (every COMPACT_EVERY tiers and once
+        at the end).
 
-        The wave-size cap (`max_wave_urls`) applies to the single-crawl
-        `step()` path only: a combined tier has no per-crawl cursor. A
-        crawl left mid-depth by a capped run should be finished with
-        `run()` before switching to the concurrent driver — step_all
-        would reprocess the depth's consumed candidates (harmless for
-        the seen set, which dedups, but batch numbering restarts)."""
-        active = list(crawl_ids or self.profiles)
-        while active:
-            active = self.step_all(active)
+        The wave-size cap (`max_wave_urls`) and the checkpointed-filter
+        probe apply to the single-crawl `step()` path only: a combined
+        tier has no per-crawl cursor. A crawl left mid-depth by a capped
+        run should be finished with `run()` before switching to the
+        concurrent driver — step_all would reprocess the depth's
+        consumed candidates (harmless for the seen set, which dedups,
+        but batch numbering restarts)."""
+
+        def tiers():
+            active = list(crawl_ids or self.profiles)
+            while active:
+                active = self.step_all(active)
+                yield
+
+        self._drive(tiers())
 
     # ------------------------------------------------------------------
     def resume(self) -> None:

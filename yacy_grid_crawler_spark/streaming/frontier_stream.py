@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.udfs import canonicalize
+from ..functions.urlnorm import canonicalize_gated
 
 CANDIDATE_SCHEMA = T.StructType(
     [
@@ -92,34 +92,8 @@ def _canonicalized(candidates: DataFrame) -> DataFrame:
     tier-1 identity and tier-2 case/fragment repair stay JVM-side; only
     the residue pays the Arrow round trip (equality pinned by the
     urlnorm test suite)."""
-    from ..functions.urlnorm import (
-        FAST_CANONICAL_PATTERN,
-        TIER2_CANONICAL_PATTERN_JVM,
-        tier2_fix_jvm,
-    )
-
-    _fast = F.regexp_like(F.col("url_raw"), F.lit(FAST_CANONICAL_PATTERN))
-    _t2 = (~F.col("_fast")) & F.regexp_like(
-        F.col("url_raw"), F.lit(TIER2_CANONICAL_PATTERN_JVM)
-    )
     return (
-        candidates.withColumn("_fast", _fast)
-        .withColumn("_t2", _t2)
-        .withColumn(
-            "url",
-            F.coalesce(
-                canonicalize(
-                    F.when(
-                        F.col("_fast") | F.col("_t2"),
-                        F.lit(None).cast("string"),
-                    ).otherwise(F.col("url_raw"))
-                ),
-                F.when(F.col("_fast"), F.col("url_raw")).when(
-                    F.col("_t2"), tier2_fix_jvm(F.col("url_raw"))
-                ),
-            ),
-        )
-        .drop("_fast", "_t2")
+        canonicalize_gated(candidates)
         .filter(F.col("url").isNotNull())
         .withColumn("url_id", F.md5(F.col("url")))
     )

@@ -395,3 +395,30 @@ def test_run_concurrent_keeps_state_bounded(spark, two_corpora, tmp_path_factory
     for job in (seq, con):
         assert len(job.store.versions()) <= 2, job.store.versions()
     _assert_same_state(seq, con)
+
+
+def test_step_all_crash_before_finalize_resumes_exactly(
+    spark, two_corpora, tmp_path_factory, monkeypatch
+):
+    """A driver killed between the depth-1 tier's sink writes and its
+    manifest publish: a fresh CrawlJob's resume() on the same store
+    ends in the state of the uninterrupted run_concurrent."""
+    from test_resume import CrashBeforeFinalize, crash_at_depth_1_commit
+
+    a, b, docs_df, robots_df, rules = two_corpora
+    seeds_depths = [(a.seeds[0], 1), (b.seeds[0], 1)]
+    ref, ref_ids = _crawl(
+        spark, str(tmp_path_factory.mktemp("crash_ref")), docs_df, robots_df,
+        rules, seeds_depths, concurrent=True,
+    )
+    root = str(tmp_path_factory.mktemp("crash"))
+    crashed = crash_at_depth_1_commit(monkeypatch)
+    with pytest.raises(CrashBeforeFinalize):
+        _crawl(spark, root, docs_df, robots_df, rules, seeds_depths, concurrent=True)
+    monkeypatch.undo()
+    assert len(crashed) == 1
+    job = CrawlJob(spark, root, docs_df, blacklist=rules, robots=robots_df, n_shards=8)
+    assert list(job.profiles) == ref_ids
+    assert job.store.manifest()["meta"]["next_depth"] == dict.fromkeys(ref_ids, 1)
+    job.resume()
+    _assert_same_state(ref, job)

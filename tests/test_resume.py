@@ -563,3 +563,69 @@ def test_second_writer_of_a_version_conflicts(spark, tmp_path):
     assert entry == ent1
     assert to_bytes(bloom) == to_bytes(bloom_of("a" * 32))
     assert os.listdir(os.path.join(store.root, "_snapshots")) == ["v000001.json"]
+
+
+class CrashBeforeFinalize(RuntimeError):
+    """Raised by the patched finalize: the commit's sink writes landed,
+    its manifest was never published."""
+
+
+def crash_at_depth_1_commit(monkeypatch) -> list[int]:
+    """Make `PendingCommit.finalize` raise once, at the commit of the
+    depth-1 wave (or tier): after all of its sink writes, crawl_status
+    first, and before its manifest. Returns the list that records the
+    version that crashed."""
+    from yacy_grid_crawler_spark.sources.statestore import PendingCommit
+
+    real = PendingCommit.finalize
+    crashed: list[int] = []
+
+    def finalize(self, meta=None):
+        wave = self.version in self.tables.get("crawl_status", [])
+        next_depths = (meta or {}).get("next_depth", {}).values()
+        if not crashed and wave and 2 in next_depths:
+            crashed.append(self.version)
+            raise CrashBeforeFinalize(f"crashed before publishing v{self.version}")
+        return real(self, meta)
+
+    monkeypatch.setattr(PendingCommit, "finalize", finalize)
+    return crashed
+
+
+def _crawl_state(job, cid):
+    """Seen set and frontier order (`_final_state`) plus the crawl's
+    status and metrics rows."""
+    from collections import Counter
+
+    def rows(table):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in job.store.read(table).filter(F.col("crawl_id") == cid).collect()
+        )
+
+    return (*_final_state(job, cid), rows("crawl_status"), rows("crawl_metrics"))
+
+
+def test_crash_before_finalize_resumes_exactly(
+    spark, corpus, docs_df, robots_df, tmp_path, reference_crawl, monkeypatch
+):
+    """A driver killed between the depth-1 wave's sink writes and its
+    manifest publish: a fresh CrawlJob's resume() on the same store
+    ends in the uninterrupted run's state (conftest's reference_crawl
+    is `_run(..., None)` of the same crawl)."""
+    root = str(tmp_path / "crash")
+    crashed = crash_at_depth_1_commit(monkeypatch)
+    with pytest.raises(CrashBeforeFinalize):
+        _run(spark, corpus, docs_df, robots_df, root, None)
+    monkeypatch.undo()
+    assert len(crashed) == 1
+    rules = parse_lines(blacklist_lines(corpus))
+    job = CrawlJob(spark, root, docs_df, blacklist=rules, robots=robots_df, n_shards=8)
+    (cid,) = job.profiles
+    # the crashed wave is invisible: the store still asks for depth 1
+    assert job.store.manifest()["meta"]["next_depth"] == {cid: 1}
+    assert job.store.current_version() == crashed[0] - 1
+    job.resume()
+    job_a, cid_a = reference_crawl
+    assert cid == cid_a
+    assert _crawl_state(job_a, cid_a) == _crawl_state(job, cid)

@@ -30,6 +30,7 @@ from ..config import build_crawl_start, make_profile
 from ..operators.batching import global_positions
 from ..operators.blacklist import BlacklistRule
 from ..operators.dedup import _pack_order
+from ..operators.extract import LINK_KINDS
 from ..operators.seeds import split_seeds
 from ..session import local_frame
 from ..sources.statestore import SCHEMAS, StateStore
@@ -463,16 +464,14 @@ class CrawlJob:
                 "crawl_id", "depth", "parent_ini", "parent_batch_no",
                 "parent_batch_pos",
             )
-            # same projection as operators.extract.extract_links, but
+            # same link filter as operators.extract.extract_links, but
             # carrying the composite parent-order columns instead of a
             # single dense ordinal (no global window needed):
             parts.append(
                 self.docs.join(parents, "doc_id", "inner")
                 .select(*order_cols, F.explode("spans").alias("span"))
                 .filter(
-                    F.col("span.kind").isin(
-                        "canonical", "inbound", "outbound", "frame", "iframe"
-                    )
+                    F.col("span.kind").isin(LINK_KINDS)
                     & F.col("span.text").isNotNull()
                 )
                 .select(
@@ -511,14 +510,9 @@ class CrawlJob:
         if self._bucketed_cache and self._bucketed_cache[0] == v:
             return self._bucketed_cache[1]
         prev_on = bool(self._bucketed_cache and self._bucketed_cache[1])
-        # a store without the size signal (out-of-tree backend) keeps
-        # the mirror off rather than AttributeError-ing mid-wave; both
-        # in-tree stores (parquet OS-stat, Iceberg snapshot summary)
-        # implement it
-        table_bytes = getattr(self.store, "table_bytes", None)
         on = prev_on or (
-            table_bytes is not None
-            and table_bytes("url_seen") >= self.bucketed_seen_threshold_bytes
+            self.store.table_bytes("url_seen")
+            >= self.bucketed_seen_threshold_bytes
         )
         self._bucketed_cache = (v, on)
         return on

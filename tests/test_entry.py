@@ -129,3 +129,67 @@ def test_entry_smoke(entrymod, spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert "node_id" in df.columns and "first_depth" in df.columns
+
+
+def test_multimodal_resize_and_frames(spark):
+    """Resize / frame-sample plumbing: schemas, counts, determinism
+    (stubbed decode, real Spark shape)."""
+    import __spark_entry__ as e
+    from yacy_grid_crawler_spark.operators.multimodal import (
+        resize_images,
+        sample_frames,
+        synth_media_from_docs,
+    )
+
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .selectExpr("row_number() over (order by doc_id) as doc_id", "text",
+                    "length(text) as n_chars")
+    )
+    media = synth_media_from_docs(docs).persist()
+    n_img = media.filter("kind = 'image'").count()
+    n_vid = media.filter("kind = 'video'").count()
+    resized = resize_images(media, 32, 32, n_partitions=8)
+    rows = resized.collect()
+    assert len(rows) == n_img
+    assert all(len(r["content"]) == 32 * 32 for r in rows)
+    assert all(r["width"] == 32 and not r["decoded"] for r in rows)
+    frames = sample_frames(media, every_ms=500, max_frames=4, n_partitions=8)
+    fr = frames.collect()
+    assert len(fr) > 0
+    per = {}
+    for r in fr:
+        per.setdefault(r["media_id"], []).append(r)
+    durations = {r["media_id"]: r["duration_ms"] for r in media.collect()}
+    for mid, fs in per.items():
+        expect = min(max(durations[mid] // 500, 1), 4)
+        assert len(fs) == expect
+        assert sorted(f["frame_no"] for f in fs) == list(range(expect))
+        assert all(f["ts_ms"] == f["frame_no"] * 500 for f in fs)
+    # determinism
+    again = {(r["media_id"], r["frame_no"]): r["frame"] for r in frames.collect()}
+    for r in fr:
+        assert again[(r["media_id"], r["frame_no"])] == r["frame"]
+    media.unpersist()
+
+
+def test_query_caches_swept_between_queries(spark):
+    """Operator-internal persists (minhash banded table, jaccard
+    shingles) must not accumulate across queries() invocations: each
+    call sweeps the previous query's caches."""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    sf = "/root/testdata/sf0.001"
+    jsc = spark.sparkContext._jsc.sc()
+    # other tests in the shared session may hold persists
+    # (e.g. localCheckpoint lineage cuts) — pin NO GROWTH, not zero
+    baseline = jsc.getPersistentRDDs().size()
+    qs["dedup_minhash_lsh"](spark, sf).count()
+    assert len(e._QUERY_CACHES) == 1
+    qs["dedup_ngram_jaccard"](spark, sf).count()
+    # the minhash cache was swept when jaccard started
+    assert len(e._QUERY_CACHES) == 1
+    qs["token_count"](spark, sf).count()
+    assert len(e._QUERY_CACHES) == 0
+    assert jsc.getPersistentRDDs().size() <= baseline

@@ -7,6 +7,7 @@ introduces a single-partition exchange would all pass row-equality
 tests while destroying 100-TB behavior.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -88,6 +89,39 @@ def test_distributed_rank_has_no_global_window(spark):
     for line in plan.splitlines():
         if "Window [" in line:
             assert "_pid" in line, f"window not pid-local: {line[:120]}"
+
+
+def test_ann_brute_force_broadcasts_queries(spark):
+    """Brute-force ANN: the big candidate side never shuffles or
+    cross-joins. r06: the default impl is the GEMM kernel — the query
+    matrix rides a sparkContext broadcast into a mapInPandas block
+    (no join of the candidate side at all); the only exchange is the
+    final per-query top-k window over the partial top-k rows. The
+    expression spec twin must still broadcast the query side."""
+    from yacy_grid_crawler_spark.operators.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = _plan(brute_force_topk(emb))
+    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+    plan_expr = _plan(brute_force_topk(emb, impl="expr"))
+    assert "BroadcastNestedLoopJoin" in plan_expr
+    assert "CartesianProduct" not in plan_expr
+
+
+def test_sq8_topk_broadcasts_queries_and_stays_codegen(spark):
+    """SQ8 ANN: quantization is pure codegen (transform/aggregate, no
+    Python), the query side broadcasts, and the big quantized side
+    never cross-joins or shuffles."""
+    from yacy_grid_crawler_spark.operators.similarity import sq8_topk
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = _plan(sq8_topk(emb))
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_wave_stays_whole_stage_codegen(spark):
@@ -209,6 +243,331 @@ def test_wave_anti_joins_are_shuffled_hash(spark):
     res.unpersist()
 
 
+def test_line_dedup_is_windowless_hash_agg(spark):
+    """line_dedup must stay window-free (both per-line frequency and
+    the per-doc regroup are hash aggregates with map-side partial
+    combine) and must not broadcast the full lines table — the freq
+    side of the join is corpus-sized at 100 TB, so a broadcast there
+    would OOM the driver; a single-partition window would serialize
+    the corpus."""
+    from yacy_grid_crawler_spark.operators.textstats import line_dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(line_dedup(docs))
+    assert "Window" not in plan
+    assert "CartesianProduct" not in plan
+    # partial_count before the exchange = map-side combine on lines
+    assert "partial_count" in plan
+
+
+def test_tfidf_window_partitions_on_doc_id(spark):
+    """tfidf_topk's top-k window must partition on doc_id (millions
+    of independent partitions), never degrade to a single global
+    sort, and the 1-row n_docs total must arrive via broadcast, not
+    a shuffle or cartesian product."""
+    from yacy_grid_crawler_spark.operators.textstats import tfidf_topk
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(tfidf_topk(docs))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" in plan  # the 1-row total
+    # the window's required distribution is doc_id-hashed, not global
+    assert "hashpartitioning(doc_id" in plan
+    # no global range sort anywhere in the plan (a degraded window
+    # would order the whole corpus through one range exchange)
+    assert "rangepartitioning" not in plan
+
+
+def test_lm_score_stays_jvm_side(spark):
+    """The unigram-LM scorer must be pure codegen — no Arrow/Python
+    eval nodes, no cartesian product; the hot path is one token
+    aggregate + one (skew-prone, AQE-covered) freq join + one per-doc
+    aggregate."""
+    from yacy_grid_crawler_spark.operators.textstats import lm_score
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(lm_score(docs))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "CartesianProduct" not in plan
+    assert "HashAggregate" in plan
+
+
+def test_host_cap_sample_distributed_has_no_global_window(spark):
+    """The scale path must rank via the range-partitioned two-phase
+    machinery — no window partitioned on the bare host (the Zipf head
+    host would become one straggler task)."""
+    from yacy_grid_crawler_spark.operators.sampling import host_cap_sample
+
+    docs = spark.range(5000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("h"), (F.col("id") % 3).cast("string")).alias("host"),
+    )
+    caches: list = []
+    out = host_cap_sample(
+        docs, cap=10, distributed=True, cache_registry=caches
+    )
+    plan = _plan(out)
+    for c in caches:
+        c.unpersist()
+    # the only windows run per (physical partition × host) — they are
+    # keyed on SPARK_PARTITION_ID, never on host alone
+    for frag in plan.split("Window ")[1:]:
+        spec = frag.split("\n", 1)[0]
+        assert "SPARK_PARTITION_ID" in spec or "_pid" in spec, spec
+
+
+def test_inverted_index_no_window_no_cartesian(spark):
+    """Index build: pure hash aggregates + term-keyed join — no
+    window (no single-partition risk), no cartesian, no Python."""
+    from yacy_grid_crawler_spark.operators.textstats import inverted_index
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(inverted_index(docs))
+    assert "Window" not in plan
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_batch_search_broadcasts_probe_side(spark):
+    """Batch retrieval: the probe-query term dim must broadcast so
+    the corpus tf table never shuffles for that join; the only window
+    partitions on query_id (small, many-partition key)."""
+    from yacy_grid_crawler_spark.operators.textstats import batch_search
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    queries = docs.filter(F.col("doc_id") % 97 == 0).select(
+        F.col("doc_id").alias("query_id"), F.col("text").alias("qtext")
+    )
+    plan = _plan(batch_search(docs, queries))
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_tpch_join_queries_broadcast_dims(spark):
+    """Q3/Q5-shape queries: every dim side broadcasts — the lineitem
+    fact must never sort-merge or shuffle for a dim join."""
+    import __spark_entry__ as e
+
+    for name in ("order_revenue_topk", "supplier_volume"):
+        plan = _plan(e.queries()[name](spark, SF_DIR))
+        assert "BroadcastHashJoin" in plan, name
+        assert "CartesianProduct" not in plan, name
+        assert "SortMergeJoin" not in plan, name
+
+
+def test_html_extract_and_url_features_are_pure_maps(spark):
+    """Both new feature operators claim zero shuffles and zero Python
+    surfaces: the physical plan must be scan -> project only."""
+    from yacy_grid_crawler_spark.operators.extract import html_extract
+    from yacy_grid_crawler_spark.operators.graph import url_features
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    page = docs.select(
+        "doc_id", F.concat(F.lit("<html><body>"), "text",
+                           F.lit("</body></html>")).alias("html")
+    )
+    for df in (
+        html_extract(page),
+        url_features(docs.select(
+            F.concat(F.lit("http://h.example.org/p/"),
+                     F.col("doc_id").cast("string")).alias("url")
+        )),
+    ):
+        plan = _plan(df)
+        assert "Exchange" not in plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_asof_join_is_single_key_shuffle_no_pair_join(spark):
+    """asof_join must never form a join operator at all — the
+    union+window formulation is one hash shuffle on the keys plus a
+    per-key sort. A pair join (theta/cartesian/BNLJ) would be the
+    quadratic plan this operator exists to avoid at 100 TB."""
+    from yacy_grid_crawler_spark.operators.joins import asof_join
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
+    )
+    left = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts_us"
+    )
+    right = ev.filter(F.col("event_type") == "view").select(
+        "user_id", "ts_us", F.col("event_id").alias("vid")
+    )
+    plan = _plan(
+        asof_join(left, right, ["user_id"], "ts_us", ["vid"])
+    )
+    for op in ("Join", "CartesianProduct"):
+        assert op not in plan, op
+    assert "hashpartitioning(user_id" in plan
+    assert "Window" in plan
+    # no global range sort — the only sort is the per-key window sort
+    assert "rangepartitioning" not in plan
+
+
+def test_range_join_is_bucketized_equi_join(spark):
+    """range_join must compile to an equi-join on (keys, bucket) with
+    the range predicate as a join/filter condition — never a
+    BroadcastNestedLoopJoin or CartesianProduct, which is what a raw
+    inequality join degenerates to when neither side is tiny."""
+    from yacy_grid_crawler_spark.operators.joins import range_join
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "ts_us", F.unix_micros(F.col("ts").cast("timestamp"))
+    )
+    points = ev.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("ts_us").alias("t"),
+        F.col("event_id").alias("click_id"),
+    )
+    intervals = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id",
+        (F.col("ts_us") - F.lit(1800_000_000)).alias("s"),
+        F.col("ts_us").alias("e"),
+    )
+    plan = _plan(
+        range_join(points, intervals, ["user_id"], "t", "s", "e",
+                   bucket=1800_000_000)
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the bucket key participates in the equi-join keys
+    assert "_bucket" in plan
+
+
+def test_hits_and_host_graph_no_cartesian(spark):
+    """HITS rounds are equi-join + hash agg; the host rollup is one
+    hash aggregate — neither may degrade to a cartesian."""
+    from yacy_grid_crawler_spark.operators.graph import (
+        hits_scores, host_link_graph,
+    )
+
+    docs = spark.range(200).withColumnRenamed("id", "doc_id")
+    plan = _plan(hits_scores(docs, iters=1))
+    assert "CartesianProduct" not in plan
+    links = spark.range(200).select(
+        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
+                 F.lit(".ex/a")).alias("src_url"),
+        F.concat(F.lit("http://h"), (F.col("id") % 7).cast("string"),
+                 F.lit(".ex/b")).alias("dst_url"),
+    )
+    plan2 = _plan(host_link_graph(links))
+    assert "CartesianProduct" not in plan2
+    assert "HashAggregate" in plan2
+
+
+def test_weighted_resample_is_takeordered_pure_jvm(spark):
+    """Gumbel top-k must compile to TakeOrderedAndProject (per-
+    partition heap), not a global sort, with zero Python surfaces."""
+    from yacy_grid_crawler_spark.operators.sampling import weighted_resample
+
+    docs = spark.range(1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 97 + 1).alias("weight")
+    )
+    plan = _plan(weighted_resample(docs, 10))
+    assert "TakeOrderedAndProject" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_dsir_weights_stays_jvm_side(spark):
+    """Feature hashing + conditional-count model build + LLR scoring:
+    all codegen, no Python, no cartesian (the 1-row totals broadcast
+    is a BroadcastNestedLoopJoin, which is the intended shape)."""
+    from yacy_grid_crawler_spark.operators.textstats import dsir_weights
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = _plan(dsir_weights(docs, "src7"))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_mirror_pairs_is_equi_join(spark):
+    """The host-pair self-join must shuffle on the shingle key — an
+    equi-join, never a cartesian/nested-loop over hosts."""
+    from yacy_grid_crawler_spark.operators.dedup_text import mirror_pairs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        (F.col("doc_id") % 20).cast("string").alias("host"), "text"
+    )
+    caches = []
+    plan = _plan(mirror_pairs(docs, cache_registry=caches))
+    assert "CartesianProduct" not in plan
+    for c in caches:
+        c.unpersist()
+
+
+def test_bm25_no_cartesian_jvm_only(spark):
+    """BM25 keeps batch_search's join geometry: df-capped equi-joins
+    plus the 1-row totals broadcast; no Python, no cartesian."""
+    from yacy_grid_crawler_spark.operators.textstats import bm25_search
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    queries = docs.filter(F.col("doc_id") % 97 == 0).select(
+        F.col("doc_id").alias("query_id"),
+        F.substring("text", 1, 30).alias("qtext"),
+    )
+    plan = _plan(bm25_search(docs, queries, k=5, df_cap=390))
+    assert "CartesianProduct" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_budget_select_no_single_partition_window(spark):
+    """The distributed prefix sum behind budget_select must keep its
+    two-phase shape: the only SinglePartition window is over the
+    P-row partition-offsets table (tiny by construction), never over
+    the data; and the whole plan stays JVM-side."""
+    from yacy_grid_crawler_spark.operators.sampling import budget_select
+
+    docs = spark.range(5000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 97 + 1).alias("n_tokens"),
+        F.col("id").alias("_ord"),
+    )
+    caches = []
+    plan = _plan(budget_select(docs, 10_000, cache_registry=caches))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # a SinglePartition exchange may appear only feeding the
+    # partition-offsets aggregate (input = one row per partition);
+    # the data path itself must be range-partitioned
+    assert "rangepartitioning" in plan.lower()
+    for c in caches:
+        c.unpersist()
+
+
+def test_prefix_filter_pairs_no_window_no_python(spark):
+    """The prefix-filter join must avoid the single-partition global
+    rank entirely (the rarest-first order is a per-doc sort_array,
+    not a Window), keep every surface JVM-side, and never fall back
+    to a cartesian product for the candidate or verify joins."""
+    from yacy_grid_crawler_spark.operators.dedup_text import (
+        prefix_filter_pairs,
+    )
+
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("alpha beta gamma delta epsilon zeta eta theta "),
+            (F.col("id") % 7).cast("string"),
+        ).alias("text"),
+    )
+    plan = _plan(prefix_filter_pairs(docs, threshold_bp=7000))
+    assert "CartesianProduct" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Window" not in plan
+
+
 def test_bucketed_seen_anti_join_drops_seen_side_exchange(spark, tmp_path):
     """The bucketed url_seen mirror must eliminate the seen-side
     shuffle from the D3 anti-join: with n_buckets == shuffle
@@ -248,3 +607,74 @@ def test_bucketed_seen_anti_join_drops_seen_side_exchange(spark, tmp_path):
     assert out.exceptAll(plain).isEmpty()
     assert plain.exceptAll(out).isEmpty()
     spark.sql("DROP TABLE IF EXISTS t_seen_bucketed")
+
+
+def test_bpe_doc_tokens_broadcasts_vocab_lookup(spark):
+    """Tokenization under the induced vocab is a broadcast dictionary
+    lookup: the per-word token-count side must broadcast (the corpus
+    word explode never shuffles for it) and the whole surface stays
+    JVM-side."""
+    from yacy_grid_crawler_spark.operators.bpe import bpe_doc_tokens
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    caches = []
+    plan = _plan(bpe_doc_tokens(docs, k=4, cache_registry=caches))
+    assert "BroadcastHashJoin" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for c in caches:
+        c.unpersist()
+
+
+def test_bpe_pair_count_is_partial_agg_no_python(spark):
+    """The per-round pair count must map-side combine (partial then
+    final HashAggregate) with zero Python surfaces."""
+    from yacy_grid_crawler_spark.operators.bpe import (
+        _pair_counts,
+        word_vocab,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(_pair_counts(word_vocab(docs)))
+    assert "partial_" in plan  # map-side combine before the exchange
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_suffix_array_output_rank_stays_two_phase(spark):
+    """The suffix array's final global ordering must ride the
+    two-phase rank: range-partitioned data path, windows keyed by the
+    physical partition id, no Python anywhere."""
+    from yacy_grid_crawler_spark.operators.suffix import suffix_array
+
+    docs = spark.range(50).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.concat(F.lit("txt"), F.md5(F.col("id").cast("string"))).alias("text"),
+    )
+    caches = []
+    plan = _plan(suffix_array(docs, cache_registry=caches))
+    assert "rangepartitioning" in plan.lower()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for line in plan.splitlines():
+        if "Window [" in line and "row_number" in line:
+            assert "_pid" in line, f"window not pid-local: {line[:120]}"
+    for c in caches:
+        c.unpersist()
+
+
+def test_linear_classifier_broadcasts_weights(spark):
+    """The hashed-feature weight lookup must broadcast (corpus side
+    never shuffles for it) and the whole plan stays JVM-side."""
+    from yacy_grid_crawler_spark.operators.textstats import (
+        linear_classifier_score,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    plan = _plan(linear_classifier_score(docs))
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -1,6 +1,10 @@
-"""The driver's correctness gate judges the `queries()` entries in
-order; the crawl-side operators come first. These tests pin that
-order and the oracle pairing without a Spark session.
+"""The driver's correctness gate samples the FIRST 50 `queries()`
+entries. Round 3 judged the 17 crawl-side entries + the first 33
+analytics entries (through ann_sq8_topk); the other 124 had no judged
+evidence. `_rotate_registry` keeps the crawl head fixed and rotates
+the analytics tail by 33 per round so evidence accumulates (round-3
+verdict ask #1b). These tests pin the rotation's invariants without a
+Spark session.
 """
 
 import __spark_entry__ as entry
@@ -15,9 +19,94 @@ CRAWL_HEAD = [
 ]
 
 
+def test_round_number_reads_judged_artifacts():
+    # CORRECTNESS_r03.json is committed → the live round is 4 (or
+    # later, if a newer artifact lands); never earlier
+    assert entry._round_number() >= 4
+
+
 def test_crawl_head_always_first():
     names = list(entry.queries())
     assert names[: len(CRAWL_HEAD)] == CRAWL_HEAD
+
+
+def test_rotation_is_permutation():
+    names = list(entry._canonical_queries())
+    assert len(names) == len(set(names))
+    # rotation at any round is a permutation of the same registry
+    for rn in (3, 4, 5, 6, 17):
+        rotated = entry._rotate_registry(names, rn)
+        assert sorted(rotated) == sorted(names)
+        assert rotated[: len(CRAWL_HEAD)] == CRAWL_HEAD
+
+
+def test_round3_window_reproduced():
+    # the rotation at round 3 must reproduce the window the driver
+    # actually judged in CORRECTNESS_r03 (offset 0: events_hourly
+    # first, ann_sq8_topk at position 49)
+    names = entry._rotate_registry(list(entry._canonical_queries()), 3)
+    assert names[17] == "events_hourly"
+    assert names[49] == "ann_sq8_topk"
+
+
+def test_round4_window_disjoint_from_round3():
+    names = list(entry._canonical_queries())
+    w3 = set(entry._rotate_registry(names, 3)[17:50])
+    w4 = set(entry._rotate_registry(names, 4)[17:50])
+    assert not (w3 & w4), w3 & w4
+
+
+def test_windows_cover_full_registry_over_rounds():
+    # successive rounds' windows eventually cover every analytics
+    # query: rounds 3-4 by offset, round 5+ by never-checked-first
+    # ordering (simulated evidence accumulation via `checked`)
+    names = list(entry._canonical_queries())
+    tail = set(names[17:])
+    covered = set()
+    for rn in (3, 4):
+        covered |= set(entry._rotate_registry(names, rn)[17:50])
+    rn = 5
+    while covered != tail and rn < 20:
+        covered |= set(
+            entry._rotate_registry(names, rn, checked=covered)[17:50]
+        )
+        rn += 1
+    assert covered == tail
+    assert rn <= 3 + -(-len(tail) // 33)  # no slower than the offset plan
+
+
+def test_round5_window_spends_every_slot_on_unchecked():
+    # round-4 verdict ask #2: the live round's 33 rotating slots must
+    # all be queries with NO driver evidence in any committed
+    # CORRECTNESS_r{N}.json artifact (86 remained after round 4)
+    names = list(entry._canonical_queries())
+    rn = entry._round_number()
+    assert rn >= 5
+    checked = entry._driver_checked(rn)
+    assert len(checked) >= 88  # r1-r4 union (round-4 verdict)
+    window = entry._rotate_registry(names, rn)[17:50]
+    overlap = set(window) & checked
+    assert not overlap, overlap
+    # and unchecked queries that miss this window are only those that
+    # no longer fit (window arithmetic, not ordering bugs)
+    unchecked = [n for n in names[17:] if n not in checked]
+    assert window == unchecked[:33]
+
+
+def test_checked_first_ordering_is_stable_permutation():
+    names = list(entry._canonical_queries())
+    some = set(names[20:40])
+    rotated = entry._rotate_registry(names, 7, checked=some)
+    assert sorted(rotated) == sorted(names)
+    assert rotated[:17] == names[:17]
+    # unchecked before checked, canonical order within each group
+    tail = rotated[17:]
+    seen_checked = False
+    for n in tail:
+        if n in some:
+            seen_checked = True
+        else:
+            assert not seen_checked, f"unchecked {n} after a checked entry"
 
 
 def test_oracle_names_cover_window():

@@ -1,17 +1,16 @@
-"""Scope guard: the package is a crawler. Every module under
-`yacy_grid_crawler_spark/` must be reached, through `import`/`from`
-statements (function-level ones included), from the crawl entry
-points, the CLI, the streaming variant, the oracle, the fixture
-generator, the benchmark or the driver contract; and the driver
-contract registers exactly the crawl-side queries. Spark-free: the
-import graph is read with `ast`, nothing is executed.
+"""Scope guard: the package is a crawler plus a pinned list of
+off-path modules. Every module under `yacy_grid_crawler_spark/` must be
+reached, through `import`/`from` statements (function-level ones
+included), from the crawl entry points, the CLI, the streaming variant,
+the oracle, the fixture generator or the benchmark; the only exceptions
+are the modules in OFF_PATH, which serve the `__spark_entry__` analytics
+registry or stand alone with their own tests. Spark-free: the import
+graph is read with `ast`, nothing is executed.
 """
 
 import ast
 import glob
 import os
-
-from test_registry_rotation import CRAWL_HEAD
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "yacy_grid_crawler_spark"
@@ -26,8 +25,18 @@ ROOTS = [
         os.path.relpath(p, REPO)
         for p in glob.glob(os.path.join(REPO, "perfbench", "*.py"))
     ),
-    "__spark_entry__.py",
 ]
+
+# Reached from no crawl-side root. Removing one of these (with its
+# tests and registry entries) shrinks this list; a new module that the
+# crawl does not import has to be named here on purpose.
+OFF_PATH = {
+    f"{PKG}.operators.{m}"
+    for m in (
+        "bpe", "clustering", "dedup_text", "graph", "joins", "multimodal",
+        "sampling", "similarity", "sketches", "suffix", "textstats",
+    )
+} | {f"{PKG}.sources.{m}" for m in ("iceberg", "synth", "warc")}
 
 
 def _module_name(rel: str) -> str:
@@ -91,12 +100,8 @@ def _reached() -> set[str]:
 
 
 def test_every_package_module_is_reached():
-    unreached = sorted(set(_package_modules()) - _reached())
-    assert not unreached, f"modules no crawl-side entry point imports: {unreached}"
-
-
-def test_registry_is_the_crawl_head():
-    import __spark_entry__ as entry
-
-    assert list(entry.queries()) == CRAWL_HEAD
-    assert set(entry.oracle_sql()) == set(CRAWL_HEAD)
+    unreached = set(_package_modules()) - _reached()
+    assert unreached == OFF_PATH, (
+        f"unreached, not in OFF_PATH: {sorted(unreached - OFF_PATH)}; "
+        f"in OFF_PATH, now reached or gone: {sorted(OFF_PATH - unreached)}"
+    )

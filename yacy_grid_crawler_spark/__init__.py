@@ -12,8 +12,8 @@ Layout
 functions/   pure-Python kernels (URL canonicalization, hashing) shared
              by the Spark pandas UDFs and the executable-spec oracle
 operators/   one module per SURVEY.md §2 operator family
-sources/     state store (parquet-snapshot tables), bucketed seen
-             mirror, JSON-list document reader
+sources/     state store (parquet-snapshot tables; Iceberg when jars
+             are present) + synthetic spans-document derivation
 plans/       the per-wave pipeline and the driver crawl loop
 oracle/      pure-Python single-node executable spec (SURVEY.md §5.1)
 fixtures/    deterministic seeded spans-corpus generator

@@ -123,7 +123,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ap.add_argument(
         "--analyze", metavar="QUERY", default=None,
-        help="run one crawl-side query from the __spark_entry__ registry "
+        help="run one analytics query from the __spark_entry__ registry "
              "against --sf-dir parquet tables and print its rows as one "
              "JSON line (repo-checkout convenience; the registry module "
              "lives at the repo root)",
@@ -131,7 +131,7 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument(
         "--sf-dir", default=None,
         help="directory holding the parquet tables --analyze reads "
-             "(documents.parquet)",
+             "(documents/embeddings/events/...)",
     )
     ap.add_argument(
         "--analyze-limit", type=int, default=20,

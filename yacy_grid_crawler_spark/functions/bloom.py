@@ -6,10 +6,12 @@ double-hash dedup)". PySpark exposes no BloomFilter API (Scala-only),
 so this is a numpy-backed implementation probed inside Arrow batches —
 no per-row Python, no JVM round-trips.
 
-Scale note: ONE global bloom does not fit at 10^10 URLs (9.6 bits ×
-10^10 ≈ 12 GB). `build_from_spark` folds per-partition bitmaps
-executor-side into one broadcast bitmap, sized for the seen sets this
-engine runs with.
+Design for 10^10-URL scale: ONE global bloom does not fit (9.6 bits ×
+10^10 ≈ 12 GB), so production builds ONE bloom PER seen-table
+partition (co-partitioned with the frontier on `pmod(hash(url_id),P)`)
+and each probe task loads only its partition's filter — that is the
+`partitioned_build` path. In local tests the per-partition filters are
+small enough to union into one broadcast bitmap (`build_from_spark`).
 
 Hashing: url_id is already an md5 hex digest (uniform by
 construction), so k indexes come from double hashing
@@ -82,7 +84,8 @@ def _or_fold_bits(df, key: str, m: int, k: int) -> np.ndarray:
     10^10-URL design point (fpp 0.01 → ~12 GB bitmap) the old
     collect()-then-OR moved bitmap_bytes × n_partitions through the
     driver (round-4 verdict's one scale finding); the tree moves
-    bitmap_bytes × fan-in."""
+    bitmap_bytes × fan-in. For 10^10 ids prefer the sharded store
+    (ShardedBloomStore) — no process ever holds the full filter."""
     import math
 
     def fold(batches):
@@ -148,3 +151,165 @@ def build_from_spark(seen_df, key: str = "url_id", fpp: float = 0.01, n_items: i
     proto = UrlBloom(n, fpp)
     proto.bits |= _or_fold_bits(seen_df, key, proto.m, proto.k)
     return proto
+
+
+# ---------------------------------------------------------------------------
+# sharded store — the 10^10 path
+# ---------------------------------------------------------------------------
+
+
+def shard_col(key_col, n_shards: int):
+    """Spark-side shard id of an md5-hex id column: the top 32 bits of
+    the digest mod n_shards. Matches `_shard_of_pandas` exactly, so
+    build-side routing (repartition) and probe-side routing agree."""
+    from pyspark.sql import functions as F
+
+    return (
+        F.conv(F.substring(key_col, 1, 8), 16, 10).cast("long")
+        % n_shards
+    ).cast("int")
+
+
+def _shard_of_pandas(ids: pd.Series, n_shards: int) -> np.ndarray:
+    return (
+        ids.str.slice(0, 8).apply(int, base=16).to_numpy(dtype=np.int64)
+        % n_shards
+    )
+
+
+class ShardedBloomStore:
+    """Per-url_id-range bloom filters for seen sets too big for one
+    bitmap (round-4 verdict task 5).
+
+    Sizing the 10^10 case: one bloom at fpp 0.01 needs ~9.6 bits/item
+    → ~12 GB — too big to broadcast, to checkpoint as one file, or to
+    move per-partition through a driver fold. Sharding by the id's
+    leading 32 bits into S ranges makes each shard's filter
+    n/S items (md5 ids are uniform, so shard skew is negligible at
+    scale): S=1024 → ~12 MB per shard at 10^10. Build repartitions the
+    seen ids by shard so EVERY shard's bitmap is produced complete by
+    exactly one task — there is no OR-fold anywhere, and no process
+    (driver included) ever materializes more than the shards it is
+    currently writing or probing. The filters land as one parquet dir
+    per shard (`path/shard=N/`); probe tasks route each id by the same
+    prefix and load only the shards present in their partition (LRU
+    cache per worker — co-partitioning the probe side by `shard_col`
+    makes that exactly one shard per task).
+
+    Same correctness contract as UrlBloom: might_seen=False is exact,
+    True may be a false positive resolved by the exact anti-join."""
+
+    def __init__(self, path: str, n_shards: int):
+        self.path = path
+        self.n_shards = n_shards
+
+    @staticmethod
+    def build(
+        seen_df,
+        path: str,
+        key: str = "url_id",
+        fpp: float = 0.01,
+        n_shards: int = 64,
+    ) -> "ShardedBloomStore":
+        from pyspark.sql import functions as F
+
+        ids = seen_df.select(F.col(key).alias("_id")).withColumn(
+            "shard", shard_col(F.col("_id"), n_shards)
+        )
+
+        def build_shards(batches):
+            # one partition holds ALL rows of each shard hashed to it
+            # (repartition by shard below) — possibly several shards,
+            # never a partial shard
+            by_shard: dict[int, list[pd.Series]] = {}
+            for pdf in batches:
+                for s, grp in pdf.groupby("shard"):
+                    by_shard.setdefault(int(s), []).append(grp["_id"].dropna())
+            out = []
+            for s, chunks in by_shard.items():
+                n = sum(len(c) for c in chunks)
+                bloom = UrlBloom(n, fpp)
+                for c in chunks:
+                    bloom.add_many(c)
+                out.append((s, bloom.m, bloom.k, bloom.bits.tobytes()))
+            yield pd.DataFrame(
+                out, columns=["shard", "m", "k", "bits"]
+            ) if out else pd.DataFrame(
+                {"shard": pd.Series(dtype="int64"), "m": pd.Series(dtype="int64"),
+                 "k": pd.Series(dtype="int64"), "bits": pd.Series(dtype=object)}
+            )
+
+        (
+            ids.repartition(n_shards, "shard")
+            .mapInPandas(build_shards, "shard int, m long, k int, bits binary")
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .parquet(path)
+        )
+        return ShardedBloomStore(path, n_shards)
+
+    def _load_shard(self, shard: int) -> UrlBloom | None:
+        import glob as _glob
+        import os as _os
+
+        import pyarrow.parquet as pq
+
+        files = _glob.glob(
+            _os.path.join(self.path, f"shard={shard}", "*.parquet")
+        )
+        if not files:
+            return None  # no ids hashed there — probe is exact False
+        bloom = None
+        for f in files:  # normally exactly one file/row per shard
+            tbl = pq.read_table(f, columns=["m", "k", "bits"])
+            for i in range(tbl.num_rows):
+                part = UrlBloom(1)
+                part.m = int(tbl["m"][i].as_py())
+                part.k = int(tbl["k"][i].as_py())
+                part.bits = np.frombuffer(
+                    tbl["bits"][i].as_py(), dtype=np.uint64
+                ).copy()
+                bloom = part if bloom is None else bloom.union(part)
+        return bloom
+
+    def probe(self, df, key: str = "url_id", out_col: str = "might_seen",
+              max_cached_shards: int = 8):
+        """`df` + a `might_seen` bool column. Each task loads only the
+        shards its partition's ids route to (worker-local LRU, at most
+        `max_cached_shards` bitmaps in memory per task); repartition
+        `df` by `shard_col(key, n_shards)` first to make that exactly
+        one shard per task."""
+        from collections import OrderedDict
+
+        path, n_shards = self.path, self.n_shards
+        out_schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        ) + f", {out_col} boolean"
+
+        def probe_parts(batches):
+            cache: OrderedDict[int, UrlBloom | None] = OrderedDict()
+            store = ShardedBloomStore(path, n_shards)
+            for pdf in batches:
+                flags = np.zeros(len(pdf), dtype=bool)
+                ids = pdf[key]
+                ok = ids.notna()
+                if ok.any():
+                    shards = _shard_of_pandas(ids[ok], n_shards)
+                    for s in np.unique(shards):
+                        if s not in cache:
+                            cache[s] = store._load_shard(int(s))
+                            while len(cache) > max_cached_shards:
+                                cache.popitem(last=False)
+                        cache.move_to_end(s)
+                        bloom = cache[s]
+                        if bloom is None:
+                            continue
+                        sel = ids[ok].loc[shards == s]
+                        flags[
+                            pdf.index.get_indexer(sel.index)
+                        ] = bloom.might_contain(sel)
+                out = pdf.copy()
+                out[out_col] = flags
+                yield out
+
+        return df.mapInPandas(probe_parts, out_schema)

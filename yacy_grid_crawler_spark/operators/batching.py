@@ -353,6 +353,38 @@ def asset_columns(
     )
 
 
+def next_fetch_batch(
+    frontier: DataFrame,
+    now_ms: int,
+    k: int,
+    shard_col: str = "shard",
+    order_cols: tuple[str, ...] = ("batch_no", "batch_pos"),
+) -> DataFrame:
+    """Consumer-side dequeue — the loader's view of the frontier
+    (the reference's queue consumers pull per-shard queues,
+    CrawlerListener.java hashKey routing): per shard, the next `k`
+    URLs whose politeness gate has opened (`not_before_ms <= now`),
+    priority lane first, then canonical batch order. Adds
+    `fetch_rank` (0-based within shard), keeps rows with rank < k.
+
+    Scale shape: the eligibility filter pushes into the frontier
+    scan (not_before_ms is a plain column), and the window partitions
+    on shard — the deliberate parallelism unit (n_shards is sized
+    several times the executor count, and hot hosts were already
+    salted across shards at enqueue), so no single-partition window
+    and no skewed key.
+    """
+    lane_rank = F.when(F.col("lane") == "priority", 0).otherwise(1)
+    w = Window.partitionBy(shard_col).orderBy(
+        lane_rank, *[F.col(c) for c in order_cols]
+    )
+    return (
+        frontier.filter(F.col("not_before_ms") <= F.lit(now_ms))
+        .withColumn("fetch_rank", F.row_number().over(w) - 1)
+        .filter(F.col("fetch_rank") < k)
+    )
+
+
 def frontier_host_lag(
     frontier: DataFrame,
     robots: DataFrame | None = None,
@@ -394,4 +426,38 @@ def frontier_host_lag(
         delay.cast("int").alias("crawl_delay_ms"),
         drain.alias("drain_ms"),
         (drain > F.lit(int(horizon_ms))).alias("starved"),
+    )
+
+
+def rendezvous_shard(
+    df: DataFrame, host_col: str, shard_ids: list[str]
+) -> DataFrame:
+    """Rendezvous (highest-random-weight) host→shard assignment
+    (Thaler & Ravishankar 1998) — the fetcher-affinity scheme that
+    survives fleet churn: each host goes to the shard maximizing
+    md5(host|shard). Unlike `assign_shard`'s pmod (where resizing
+    from K to K−1 shards reshuffles ~all hosts and every politeness/
+    robots/connection cache behind them goes cold), removing a shard
+    moves ONLY the hosts that lived on it, each to its second-highest
+    shard — ~1/K of the keyspace, the theoretical minimum.
+
+    Output: input columns + `shard` (string id). Deterministic (md5,
+    ties broken by shard id — md5 collisions aside, unreachable).
+
+    Scale shape: pure codegen — a K-element array of (weight, shard)
+    structs folded by array_max per row; no shuffle, no UDF, no dim
+    join. K is the fetcher-fleet size (10²-10³): the struct array is
+    built once per row in whole-stage codegen. For K beyond that,
+    switch to the explode+max_by formulation (one narrow agg)."""
+    scored = [
+        F.struct(
+            F.md5(
+                F.concat(F.col(host_col), F.lit("|" + str(s)))
+            ).alias("w"),
+            F.lit(str(s)).alias("shard"),
+        )
+        for s in shard_ids
+    ]
+    return df.withColumn(
+        "shard", F.array_max(F.array(*scored))["shard"]
     )

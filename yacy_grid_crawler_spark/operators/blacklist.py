@@ -113,6 +113,14 @@ def default_indexer_rules() -> list[BlacklistRule]:
     )
 
 
+def rules_df(spark: SparkSession, rules: list[BlacklistRule]) -> DataFrame:
+    """FIXTURES.md §4 blacklist_rules shape."""
+    return spark.createDataFrame(
+        [(r.rule_kind, r.host, r.pattern, r.source, r.info) for r in rules],
+        "rule_kind string, host string, pattern string, source string, info string",
+    )
+
+
 _ISIN_MAX = 64  # above this, a literal In-list bloats every plan copy
 
 # The shipped host list is 13k rows; building its DataFrame costs a

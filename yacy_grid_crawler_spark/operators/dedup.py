@@ -222,6 +222,7 @@ def bloom_prefilter(
     expected_items: int | None = None,
     fpp: float = 0.01,
     cache_registry: list | None = None,
+    filter_kind: str = "bloom",
     prebuilt=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split candidates into (definitely_new, maybe_seen) using a
@@ -232,12 +233,21 @@ def bloom_prefilter(
     maybe_seen (true hits + FPs) goes through anti_join_seen. Returns
     the pair; caller unions definitely_new with the anti-join result —
     a bloom FP can therefore never cause a false drop.
+
+    `filter_kind='cuckoo'` swaps in the cuckoo filter
+    (functions/cuckoo.py) — identical probe contract, plus in-place
+    deletes for the 7-day TTL sweep (CrawlerListener.java:84-85) so
+    expiry never forces a rebuild.
     """
     if prebuilt is not None:
         # checkpointed filter (north star: built at wave commit,
         # persisted in the snapshot, probed next wave) — skips the
         # O(seen) per-wave rebuild entirely
         bloom = prebuilt
+    elif filter_kind == "cuckoo":
+        from ..functions.cuckoo import build_from_spark as _build
+
+        bloom = _build(seen, key=key, n_items=expected_items)
     else:
         from ..functions.bloom import build_from_spark
 
@@ -274,11 +284,12 @@ def dedup_against_seen(
     use_bloom: bool = True,
     seen_count: int | None = None,
     cache_registry: list | None = None,
+    filter_kind: str = "bloom",
     prebuilt=None,
     assume_unique: bool = False,
     join_hint: str | None = None,
 ) -> DataFrame:
-    """bloom pre-filter (fast path) + exact anti-join (decider)."""
+    """bloom/cuckoo pre-filter (fast path) + exact anti-join (decider)."""
     if not use_bloom:
         return anti_join_seen(
             candidates, seen, key, crawl_col,
@@ -286,7 +297,8 @@ def dedup_against_seen(
         )
     new, maybe = bloom_prefilter(
         candidates, seen, key, expected_items=seen_count,
-        cache_registry=cache_registry, prebuilt=prebuilt,
+        cache_registry=cache_registry, filter_kind=filter_kind,
+        prebuilt=prebuilt,
     )
     resolved = anti_join_seen(
         maybe, seen, key, crawl_col,

@@ -44,3 +44,478 @@ def extract_links(docs: DataFrame, parent_ord_col: str = "parent_ord") -> DataFr
             F.col("span.text").alias("url_raw"),
         )
     )
+
+
+def span_sequence(docs: DataFrame) -> DataFrame:
+    """Emitted-document span sequence (doc_id, span_ord, kind, text,
+    media_ref) — the per-row invariant surface for span-sequence
+    equality tests (BASELINE.json input_hint)."""
+    return docs.select(
+        "doc_id", F.posexplode("spans").alias("span_ord", "span")
+    ).select(
+        "doc_id",
+        "span_ord",
+        F.col("span.kind").alias("kind"),
+        F.col("span.text").alias("text"),
+        F.col("span.media_ref").alias("media_ref"),
+        F.col("span.offset").alias("offset"),
+    )
+
+
+def span_diff(
+    a: DataFrame, b: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Per-row span-sequence diff between two interleaved-document
+    tables — the engine's per-row invariant (BASELINE.json
+    input_hint: span-sequence equality on kind, text, media_ref,
+    order) as a first-class data-quality operator. Use it to audit a
+    format roundtrip (e.g. sources/jsonlist.py), a migration, or two
+    pipeline versions.
+
+    Returns only rows that are NOT equal: (id, status) with status in
+    'only_a' / 'only_b' / 'differ'. Equality is whole-array
+    struct equality, order-sensitive — exactly the invariant.
+
+    Scale shape: one full-outer hash join on the id, comparison pure
+    codegen; no explode, so a 100-span doc costs one array compare,
+    not 100 rows."""
+    left = a.select(F.col(id_col).alias("_id"), F.col("spans").alias("_sa"))
+    right = b.select(F.col(id_col).alias("_id"), F.col("spans").alias("_sb"))
+    j = left.join(right, "_id", "full_outer")
+    status = (
+        F.when(F.col("_sb").isNull(), "only_a")
+        .when(F.col("_sa").isNull(), "only_b")
+        .when(F.col("_sa") != F.col("_sb"), "differ")
+    )
+    return (
+        j.withColumn("status", status)
+        .filter(F.col("status").isNotNull())
+        .select(F.col("_id").alias(id_col), "status")
+    )
+
+
+def assemble_text(docs: DataFrame, sep: str = " ") -> DataFrame:
+    """Materialize a training-text column from an interleaved span
+    document: non-media spans concatenated in offset order (media
+    spans are counted but contribute no text) — the bridge from the
+    crawl's span model (BASELINE.json input_hint) to the text
+    pipeline's `documents(text)` shape.
+
+    Pure codegen per row: re-struct each span offset-first so
+    `array_sort`'s lexicographic struct order IS offset order, filter,
+    `array_join`. No explode — a 500-span page is one array pipeline,
+    not 500 rows."""
+    by_offset = F.array_sort(
+        F.transform(
+            F.col("spans"),
+            lambda s: F.struct(
+                s["offset"].alias("offset"),
+                s["kind"].alias("kind"),
+                s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+            ),
+        )
+    )
+    is_media = lambda s: s["kind"] == "media"
+    texts = F.filter(by_offset, lambda s: ~is_media(s))
+    return docs.select(
+        "doc_id",
+        F.array_join(
+            F.transform(texts, lambda s: s["text"]), sep
+        ).alias("assembled_text"),
+        F.size(texts).cast("int").alias("n_text_spans"),
+        F.size(F.filter(F.col("spans"), is_media)).cast("int").alias(
+            "n_media_spans"
+        ),
+    )
+
+
+def html_extract(docs: DataFrame, html_col: str = "html") -> DataFrame:
+    """Main-content extraction from raw HTML — the step between the
+    crawler's fetched payload (the reference hands raw bytes to its
+    loader/parser stack) and the text pipeline's `documents(text)`
+    shape, as a pure-codegen map:
+
+      1. drop <script>/<style>/<!-- --> blocks (content is never text)
+      2. title  = first <title> element's inner text
+      3. n_links/n_images = <a href / <img tag counts (crawl fan-out
+         and media-density signals for quality scoring)
+      4. strip every remaining tag, decode the six classic entities,
+         collapse whitespace runs, trim
+
+    Output: (doc_id, title, text, n_links, n_images, html_len).
+    Regex subset chosen to behave identically under java.util.regex
+    and RE2 (DuckDB): no backreferences, no lookbehind; '(?is)' flags
+    and lazy quantifiers only. Zero shuffles at any scale — fuses
+    with the scan; at 100 TB this is the map stage right after fetch.
+    """
+    h = F.col(html_col)
+    stripped = F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(h, r"(?is)<script\b.*?</script>", " "),
+            r"(?is)<style\b.*?</style>", " ",
+        ),
+        r"(?s)<!--.*?-->", " ",
+    )
+    title = F.trim(
+        F.regexp_replace(
+            F.regexp_extract(stripped, r"(?is)<title[^>]*>(.*?)</title>", 1),
+            r"\s+", " ",
+        )
+    )
+    n_links = F.size(
+        F.regexp_extract_all(stripped, F.lit(r"(?i)<a\s[^>]*href"), F.lit(0))
+    ).cast("int")
+    n_images = F.size(
+        F.regexp_extract_all(stripped, F.lit(r"(?i)<img\b"), F.lit(0))
+    ).cast("int")
+    # the <title> element is metadata, not body text — drop the whole
+    # element (it was extracted above) before the generic tag strip
+    text = F.regexp_replace(
+        F.regexp_replace(stripped, r"(?is)<title\b.*?</title>", " "),
+        r"(?s)<[^>]*>", " ",
+    )
+    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
+                    ("&#39;", "'"), ("&nbsp;", " "), ("&amp;", "&")):
+        # &amp; LAST so '&amp;lt;' decodes to '&lt;' (literal), not '<'
+        text = F.replace(text, F.lit(ent), F.lit(ch))
+    text = F.trim(F.regexp_replace(text, r"\s+", " "))
+    return docs.select(
+        "doc_id",
+        title.alias("title"),
+        text.alias("text"),
+        n_links.alias("n_links"),
+        n_images.alias("n_images"),
+        F.length(h).cast("int").alias("html_len"),
+    )
+
+
+def caption_pairs(docs: DataFrame) -> DataFrame:
+    """Media span → nearest PRECEDING text span (offset order) — the
+    image-caption candidate pairing that turns interleaved
+    text+media documents into multimodal (image, caption) training
+    pairs. Media spans with no preceding text get ('', -1) sentinels,
+    and text spans whose text is NULL are ignored (both pinned by the
+    DuckDB oracle, whose IGNORE-NULLS window has the same semantics) —
+    NULL-free output by contract. A text and a media span sharing an
+    offset do NOT pair (strictly preceding only).
+
+    Output: (doc_id, media_ref, media_offset, caption,
+    caption_offset), one row per media span.
+
+    Scale shape: ARRAY-NATIVE and LINEAR per row — one array_sort by
+    offset + one F.aggregate fold carrying the latest preceding text
+    (whole-stage codegen, no Python), then one explode sized by the
+    media-span count only. Zero shuffles, zero windows: the pairing
+    never leaves the row, so at 100 TB this is a map-only stage
+    reading exactly the spans column."""
+    sorted_spans = F.array_sort(
+        F.transform(
+            "spans",
+            lambda s: F.struct(
+                s["offset"].alias("o"),
+                # 'media' < 'text': at equal offset media folds first,
+                # keeping the strictly-preceding contract
+                s["kind"].alias("k"),
+                s["text"].alias("t"),
+                s["media_ref"].alias("m"),
+            ),
+        )
+    )
+    pair_t = (
+        "array<struct<media_ref:string,media_offset:int,"
+        "caption:string,caption_offset:int>>"
+    )
+    acc0 = F.struct(
+        F.lit(-1).cast("int").alias("co"),
+        F.lit("").alias("ct"),
+        F.lit(None).cast(pair_t).alias("out"),
+    )
+
+    def _fold(acc, s):
+        took = F.struct(
+            s["o"].cast("int").alias("co"),
+            s["t"].alias("ct"),
+            acc["out"].alias("out"),
+        )
+        return (
+            F.when((s["k"] == F.lit("text")) & s["t"].isNotNull(), took)
+            .when(
+                s["k"] == F.lit("media"),
+                F.struct(
+                    acc["co"].alias("co"),
+                    acc["ct"].alias("ct"),
+                    F.concat(
+                        F.coalesce(acc["out"], F.array().cast(pair_t)),
+                        F.array(
+                            F.struct(
+                                s["m"].alias("media_ref"),
+                                s["o"].cast("int").alias("media_offset"),
+                                acc["ct"].alias("caption"),
+                                acc["co"].alias("caption_offset"),
+                            )
+                        ),
+                    ).alias("out"),
+                ),
+            )
+            .otherwise(acc)
+        )
+
+    pairs = docs.select(
+        "doc_id",
+        F.explode(
+            F.coalesce(
+                F.aggregate(sorted_spans, acc0, _fold)["out"],
+                F.array().cast(pair_t),
+            )
+        ).alias("p"),
+    )
+    return pairs.select(
+        "doc_id",
+        F.col("p.media_ref").alias("media_ref"),
+        F.col("p.media_offset").alias("media_offset"),
+        F.col("p.caption").alias("caption"),
+        F.col("p.caption_offset").alias("caption_offset"),
+    )
+
+
+def span_mix(docs: DataFrame) -> DataFrame:
+    """Per-document interleaved-span composition profile — the
+    corpus-audit rollup for the engine's native payload (BASELINE.json
+    input_hint: docs are arrays of text|media spans). A multimodal
+    training pipeline filters and mixes on exactly these numbers:
+    text-only docs route to the text corpus, media-heavy docs to the
+    vision mix, lead-media docs need the caption sentinel path
+    (`caption_pairs`), and media_bp is the mixture-balance knob.
+
+    Output per doc: n_spans, n_text, n_media, media_bp (basis points
+    of spans that are media, integer div), first_media_offset (-1 if
+    the doc has no media), text_chars (total text payload).
+
+    Scale shape: ONE narrow codegen projection — array size/filter/
+    aggregate over the spans column, zero shuffles, zero Python; at
+    100 TB it fuses with whatever parquet scan precedes it, and the
+    binary media blobs are never touched (spans carry refs, not
+    bytes)."""
+    spans = F.col("spans")
+    media = F.filter(spans, lambda s: s["kind"] == F.lit("media"))
+    texts = F.filter(spans, lambda s: s["kind"] == F.lit("text"))
+    n_spans = F.size(spans)
+    n_media = F.size(media)
+    return docs.select(
+        "doc_id",
+        n_spans.alias("n_spans"),
+        F.size(texts).alias("n_text"),
+        n_media.alias("n_media"),
+        F.when(n_spans > 0, F.expr("10000 * size(filter(spans, s -> s.kind = 'media')) div size(spans)"))
+        .otherwise(F.lit(0))
+        .cast("int")
+        .alias("media_bp"),
+        # try_element_at: ANSI mode makes element_at THROW on an empty
+        # array instead of returning NULL
+        F.coalesce(
+            F.try_element_at(media, F.lit(1))["offset"], F.lit(-1)
+        ).cast("int").alias("first_media_offset"),
+        F.aggregate(
+            texts,
+            F.lit(0).cast("long"),
+            lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
+        ).alias("text_chars"),
+    )
+
+
+CANONICAL_RE = r'(?is)<link\b[^>]*rel="canonical"[^>]*href="([^"]*)"'
+
+
+def canonical_links(
+    docs: DataFrame, url_col: str = "url", html_col: str = "html"
+) -> DataFrame:
+    """rel=canonical resolution — the page's OWN dedup declaration,
+    and the cheapest duplicate signal a crawler gets: faceted/tracked
+    variants of one page all point their <link rel="canonical"> at
+    the same target, so collapsing on it removes whole families of
+    URL-level duplicates BEFORE any content hashing runs. (The
+    reference indexes by md5(normalform); rel=canonical is the
+    complementary author-declared key.)
+
+    Output per row: url, canonical_url (the declared target, or the
+    page's own URL when it declares none — empty/missing href falls
+    back too), is_self (no foreign canonical), and keep = this row is
+    the group's elected representative (min url per canonical_url —
+    deterministic, and the canonical target itself wins when present
+    because equal-to-target sorts first only if lexicographically
+    least; the rule is plain min for engine/oracle exactness).
+
+    Regex subset: '(?is)' + lazy-free character classes only —
+    identical under java.util.regex and RE2; rel-before-href
+    attribute order (the overwhelmingly common emission order;
+    documented simplification like html_extract's). Scale shape: one
+    codegen map + ONE canonical_url-keyed min-agg shuffle joined
+    back; canonical families are tiny (page variants), no skew."""
+    target = F.regexp_extract(F.col(html_col), CANONICAL_RE, 1)
+    canon = F.when(target != "", target).otherwise(F.col(url_col))
+    d = docs.select(
+        F.col(url_col).alias("url"), canon.alias("canonical_url")
+    ).withColumn("is_self", F.col("url") == F.col("canonical_url"))
+    keeper = d.groupBy("canonical_url").agg(F.min("url").alias("_keep_url"))
+    return (
+        d.join(keeper, "canonical_url")
+        .select(
+            "url",
+            "canonical_url",
+            "is_self",
+            (F.col("url") == F.col("_keep_url")).alias("keep"),
+        )
+    )
+
+
+META_ROBOTS_RE = r'(?is)<meta\b[^>]*name="robots"[^>]*content="([^"]*)"'
+
+
+def meta_robots(
+    docs: DataFrame, url_col: str = "url", html_col: str = "html"
+) -> DataFrame:
+    """Page-level robots directives — the in-document counterpart of
+    the host-level robots.txt gate (F-family) and the third input to
+    the reference's index/noindex split (F4): a page the profile and
+    blacklist both allow may still declare
+    <meta name="robots" content="noindex,nofollow">, which removes it
+    from the index (noindex), stops link expansion through it
+    (nofollow), and blocks archive copies (noarchive).
+
+    Output per page: noindex / nofollow / noarchive booleans plus
+    do_index = NOT noindex and expand_links = NOT nofollow — the two
+    columns the wave's F4 verdict and the frontier's link expansion
+    consume directly. 'none' is the RFC shorthand for
+    'noindex, nofollow' and sets both.
+
+    Regex subset: '(?is)' + character classes, name-before-content
+    attribute order (the canonical emission order; documented
+    simplification like html_extract's) — identical under
+    java.util.regex and RE2. Zero shuffles: one codegen map that
+    fuses with the post-fetch scan."""
+    content = F.lower(
+        F.regexp_extract(F.col(html_col), META_ROBOTS_RE, 1)
+    )
+    has = lambda d: content.rlike(rf"(^|[ ,]){d}($|[ ,])")  # noqa: E731
+    none = has("none")
+    noindex = has("noindex") | none
+    nofollow = has("nofollow") | none
+    return docs.select(
+        F.col(url_col).alias("url"),
+        noindex.alias("noindex"),
+        nofollow.alias("nofollow"),
+        has("noarchive").alias("noarchive"),
+        (~noindex).alias("do_index"),
+        (~nofollow).alias("expand_links"),
+    )
+
+
+ANCHOR_TAG_RE = r"(?is)<a\s[^>]*>"
+HREF_RE = r'(?is)href="([^"]*)"'
+NOFOLLOW_RE = r'(?is)rel="[^"]*nofollow[^"]*"'
+
+
+def html_links(
+    docs: DataFrame, url_col: str = "url", html_col: str = "html"
+) -> DataFrame:
+    """Anchor extraction with link-level rel=nofollow — the raw-HTML
+    twin of the spans-model `extract_links` (P1), carrying the one
+    attribute the frontier must honor per LINK rather than per page:
+    a nofollow edge is fetched-page evidence the target exists but is
+    NOT an endorsement, so the crawler drops it from link expansion
+    (and PageRank/TrustRank drop it from the edge list) while
+    `meta_robots`' page-level nofollow gates the whole page.
+
+    Output: one row per anchor with a non-empty href —
+    (url, href, nofollow, link_ord) in document order.
+
+    Scale shape: one regexp_extract_all + posexplode (fan-out = the
+    page's anchor count, the same factor P1's span explode pays) +
+    two per-tag codegen regex probes; no shuffle — at 100 TB this
+    fuses with the post-fetch scan exactly like html_extract. Regex
+    subset java.regex/RE2-identical; href="..." double-quoted form
+    (the canonical emission; documented simplification)."""
+    # F.lit pattern (not an expr string literal): SQL single-quote
+    # parsing would eat the '\s' backslash
+    tags = F.regexp_extract_all(
+        F.col(html_col), F.lit(ANCHOR_TAG_RE), F.lit(0)
+    )
+    d = docs.select(
+        F.col(url_col).alias("url"),
+        F.posexplode(tags).alias("link_ord", "_tag"),
+    )
+    href = F.regexp_extract(F.col("_tag"), HREF_RE, 1)
+    return (
+        d.select(
+            "url",
+            href.alias("href"),
+            F.col("_tag").rlike(NOFOLLOW_RE).alias("nofollow"),
+            "link_ord",
+        )
+        .filter(F.col("href") != "")
+    )
+
+
+def span_lint(docs: DataFrame) -> DataFrame:
+    """Interleaved-span schema lint — the ingest gate for the engine's
+    native payload (BASELINE.json input_hint): before any downstream
+    operator trusts a spans array, verify the invariants the format
+    promises. Checks per document:
+
+    * `offsets_ok` — span offsets are exactly the dense 0..n-1
+      sequence (in any array order): the per-row span-sequence
+      invariant's precondition, and what assemble_text's sort relies
+      on;
+    * `n_empty_text` — text spans carrying no text (payload loss);
+    * `n_missing_ref` — media spans with a NULL/empty media_ref
+      (a span that can never resolve to a blob);
+    * `n_bad_kind` — spans whose kind is neither 'text' nor 'media';
+    * `lint_ok` — the conjunction.
+
+    Scale shape: one narrow codegen projection (array sort/transform/
+    filter/aggregate), zero shuffles, zero Python — fuses with the
+    scan like span_mix; blobs never touched.
+    """
+    spans = F.col("spans")
+    n = F.size(spans)
+    offsets_ok = (
+        F.sort_array(F.transform(spans, lambda s: s["offset"]))
+        == F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(
+            F.expr("array()").cast("array<int>")
+        )
+    )
+    n_empty_text = F.size(
+        F.filter(
+            spans,
+            lambda s: (s["kind"] == F.lit("text"))
+            & (F.coalesce(F.length(s["text"]), F.lit(0)) == 0),
+        )
+    )
+    n_missing_ref = F.size(
+        F.filter(
+            spans,
+            lambda s: (s["kind"] == F.lit("media"))
+            & (F.coalesce(F.length(s["media_ref"]), F.lit(0)) == 0),
+        )
+    )
+    n_bad_kind = F.size(
+        F.filter(
+            spans,
+            lambda s: ~s["kind"].isin("text", "media"),
+        )
+    )
+    return docs.select(
+        "doc_id",
+        n.alias("n_spans"),
+        offsets_ok.alias("offsets_ok"),
+        n_empty_text.alias("n_empty_text"),
+        n_missing_ref.alias("n_missing_ref"),
+        n_bad_kind.alias("n_bad_kind"),
+        (
+            offsets_ok
+            & (n_empty_text == 0)
+            & (n_missing_ref == 0)
+            & (n_bad_kind == 0)
+        ).alias("lint_ok"),
+    )

@@ -153,3 +153,48 @@ def robots_verdict(df: DataFrame, robots: DataFrame) -> DataFrame:
     return joined.withColumn("robots_blocked", F.coalesce(blocked, F.lit(False))).drop(
         "disallow_prefixes"
     )
+
+
+# Tracking params every crawl pipeline strips before dedup/storage:
+# the full utm_* family plus the big ad-click ids. Shared verbatim
+# with the DuckDB oracle (plain RE2-safe alternation).
+TRACKING_PARAM_RE = "^(utm_[a-z0-9_]*|gclid|fbclid|msclkid|mc_eid)(=.*)?$"
+
+
+def strip_tracking_params(
+    urls: DataFrame, url_col: str = "url"
+) -> DataFrame:
+    """Remove tracking query parameters (TRACKING_PARAM_RE) from
+    already-canonical URLs, preserving the ORDER of surviving params —
+    the hygiene step between canonicalization (P2, reference-parity:
+    keeps the query intact) and dedup/storage: without it the same
+    page arriving via two campaigns gets two url_ids.
+
+    Contract: splits at the FIRST '?' (canonical URLs carry no
+    fragment); empty params (from '&&' or a trailing '&'/'?') are
+    dropped; a URL whose params are all stripped loses its '?'.
+
+    Output: every input column + cleaned_url + n_stripped.
+
+    Scale shape: pure narrow codegen map (split + filter +
+    array_join) — no shuffle, no Python."""
+    url = F.col(url_col)
+    pos = F.instr(url, "?")
+    has_q = pos > 0
+    # instr/substring (not split+getItem: ANSI mode throws on an
+    # out-of-range array index when the URL has no query)
+    base = F.when(has_q, F.substring(url, F.lit(1), pos - 1)).otherwise(url)
+    q = F.when(has_q, F.substring(url, pos + 1, F.length(url))).otherwise(
+        F.lit("")
+    )
+    params = F.filter(F.split(q, "&"), lambda p: p != "")
+    keep = F.filter(params, lambda p: ~p.rlike(TRACKING_PARAM_RE))
+    cleaned = F.when(
+        has_q & (F.size(keep) > 0),
+        F.concat(base, F.lit("?"), F.array_join(keep, "&")),
+    ).otherwise(base)
+    return urls.select(
+        "*",
+        cleaned.alias("cleaned_url"),
+        (F.size(params) - F.size(keep)).cast("int").alias("n_stripped"),
+    )

@@ -56,3 +56,147 @@ def parse_robots(
         F.expr(prefixes).alias("disallow_prefixes"),
         F.expr(delay).cast("int").alias("crawl_delay_ms"),
     )
+
+
+def robots_sitemaps(
+    bodies: DataFrame,
+    host_col: str = "host",
+    text_col: str = "robots_txt",
+) -> DataFrame:
+    """(host, robots_txt) → one row per ``Sitemap: <url>`` directive
+    (host, sitemap_url) — the discovery half of the sitemap loop
+    (`seeds.parse_sitemap` expands the fetched documents). Same
+    contract style as parse_robots: exact-case directive, line
+    oriented, CRLF-safe, pure codegen; hosts without sitemap lines
+    produce no rows (inner explode)."""
+    urls = (
+        f"transform(filter(transform(split({text_col}, '\\r?\\n'),"
+        " l -> trim(l)), l -> startswith(l, 'Sitemap:')),"
+        " l -> trim(substring(l, 9)))"
+    )
+    return bodies.select(
+        F.col(host_col).alias("host"),
+        F.explode(F.expr(f"filter({urls}, u -> u != '')")).alias(
+            "sitemap_url"
+        ),
+    )
+
+
+def _rule_regex(pattern):
+    """robots pattern → anchored regex, pure codegen: escape regex
+    metachars, then '*' → '.*'; a trailing '$' anchors end-of-path
+    (escaped first like everything else, then the escaped tail form
+    '\\$' is restored to a real anchor). Shared shape with the DuckDB
+    oracle (same three regexp_replace steps)."""
+    esc = F.regexp_replace(pattern, r"([.^$+?()\[\]{}|\\])", r"\\$1")
+    star = F.regexp_replace(esc, r"\*", ".*")
+    # restore an escaped TRAILING '$' to an end anchor (java
+    # replacement dialect: literal '$' must be written '\$')
+    return F.concat(
+        F.lit("^"), F.regexp_replace(star, r"\\\$$", r"\$")
+    )
+
+
+def rfc9309_verdict(
+    urls: DataFrame, rules: DataFrame, broadcast_rules: bool = True
+) -> DataFrame:
+    """RFC 9309 (Google-style) robots matching — the modern grammar
+    the wave's deliberately-simplified prefix gate does not attempt:
+    '*' wildcards, '$' end anchors, and LONGEST-MATCH precedence with
+    allow winning length ties. Provided as a standalone operator (not
+    wired into the wave: crawl-order equality vs the reference pins
+    the prefix semantics there).
+
+    urls: (host, path); rules: (host, allow boolean, pattern string).
+    Output: (host, path, allowed, winner_pattern, winner_len) —
+    NULL-free: unmatched paths are allowed with ('', 0).
+
+    Scale shape: rules are a robots-sized dim (≤ a few k rules per
+    host) — broadcast join on host, per-pair rlike (codegen), then
+    one (host, path) aggregate picking max(len, allow, pattern); the
+    fact side shuffles once for the aggregate. Set
+    broadcast_rules=False to let AQE choose when the rules table is
+    genuinely huge."""
+    rx = rules.select(
+        "host",
+        F.col("allow").cast("boolean").alias("allow"),
+        "pattern",
+        F.length("pattern").cast("int").alias("plen"),
+        _rule_regex(F.col("pattern")).alias("_rx"),
+    )
+    if broadcast_rules:
+        rx = F.broadcast(rx)
+    hits = urls.join(rx, "host").filter(
+        F.rlike(F.col("path"), F.col("_rx"))
+    )
+    # one packed max picks the winner: longest pattern, allow on ties
+    # (pattern string as the last tiebreak for determinism)
+    winner = hits.groupBy("host", "path").agg(
+        F.max(
+            F.struct(
+                F.col("plen"),
+                F.col("allow").cast("int").alias("a"),
+                F.col("pattern").alias("p"),
+            )
+        ).alias("_w")
+    )
+    return (
+        urls.join(winner, ["host", "path"], "left")
+        .select(
+            "host",
+            "path",
+            F.coalesce(F.col("_w.a") == 1, F.lit(True)).alias("allowed"),
+            F.coalesce(F.col("_w.p"), F.lit("")).alias("winner_pattern"),
+            F.coalesce(F.col("_w.plen"), F.lit(0)).cast("int").alias(
+                "winner_len"
+            ),
+        )
+    )
+
+
+def robots_delta(
+    urls: DataFrame,
+    rules_a: DataFrame,
+    rules_b: DataFrame,
+    broadcast_rules: bool = True,
+) -> DataFrame:
+    """Robots-snapshot compliance audit — what a polite crawler must
+    DO when a site's robots.txt changes: URLs allowed under snapshot A
+    but disallowed under B are `delete` candidates (serve-no-more, the
+    continuous-time extension of the reference's crawl-start index
+    delete, CrawlStartService.java:141-173); URLs newly allowed are
+    `recrawl` candidates. Unchanged verdicts drop out.
+
+    Output: (host, path, action, pattern_b) — pattern_b is snapshot
+    B's winning rule, the audit trail for the action.
+
+    Scale shape: two `rfc9309_verdict` passes over the SAME url set
+    (each a broadcast rules join + one (host, path) aggregate) joined
+    on (host, path) — co-keyed with the verdict aggregates, so AQE
+    reuses the partitioning; the disagreement filter cuts the join
+    output to the (rare) changed rows before anything else sees it.
+    The url set is deduped on (host, path) first — frontier dumps
+    routinely repeat a URL, and without the dedup each duplicate would
+    multiply quadratically through the two-verdict join."""
+    urls = urls.select("host", "path").distinct()
+    a = rfc9309_verdict(urls, rules_a, broadcast_rules).select(
+        "host", "path", F.col("allowed").alias("_allowed_a")
+    )
+    b = rfc9309_verdict(urls, rules_b, broadcast_rules).select(
+        "host",
+        "path",
+        F.col("allowed").alias("_allowed_b"),
+        F.col("winner_pattern").alias("pattern_b"),
+    )
+    return (
+        a.join(b, ["host", "path"])
+        .filter(F.col("_allowed_a") != F.col("_allowed_b"))
+        .select(
+            "host",
+            "path",
+            F.when(F.col("_allowed_b"), F.lit("recrawl"))
+            .otherwise(F.lit("delete"))
+            .alias("action"),
+            "pattern_b",
+        )
+    )

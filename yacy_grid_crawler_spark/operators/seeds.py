@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import canonicalize_url
@@ -61,3 +62,19 @@ def split_seeds(seed_strings: list[str]) -> list[dict]:
                     "url_raw": raw, "url": canonicalize_url(raw),
                 })
     return rows
+
+
+def parse_sitemap(
+    df: DataFrame, xml_col: str = "sitemap_xml", keep: tuple[str, ...] = ("doc_id",)
+) -> DataFrame:
+    """Sitemap seed expansion: extract every ``<loc>`` URL from
+    sitemap XML bodies — the other bulk seed source next to the S1
+    splitter (YaCy's loader feeds sitemap URLs into crawl starts; the
+    splitter then treats each as a seed). Regex extraction, not an
+    XML parser, deliberately: sitemaps are machine-generated with a
+    fixed element shape, the regex stays in whole-stage codegen, and
+    the same pattern runs verbatim in the DuckDB oracle. One output
+    row per loc; malformed/empty bodies simply yield no rows.
+    """
+    locs = F.expr(f"regexp_extract_all({xml_col}, '<loc>([^<]+)</loc>', 1)")
+    return df.select(*keep, F.explode(locs).alias("loc"))

@@ -19,14 +19,22 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
+    master: str | None = None,
 ) -> SparkSession:
-    """A local[cores] session; `cores` defaults to SPARK_GRAFT_CPUS, else
-    the machine's CPU count. Python workers import the repo via
-    spark.executorEnv.PYTHONPATH below."""
+    """`cores` defaults to SPARK_GRAFT_CPUS, else the machine's CPU
+    count. `master` overrides the default local[cores] — e.g.
+    "local-cluster[4,8,8192]" runs 4 separate executor JVMs x 8 cores
+    (the spark-submit multi-executor shape; executors import the repo
+    via spark.executorEnv.PYTHONPATH below)."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     shuffle_partitions = shuffle_partitions or max(cores, 8)
+    if master and master.startswith("local-cluster"):
+        os.environ.setdefault(
+            "SPARK_HOME",
+            os.path.dirname(os.path.abspath(__import__("pyspark").__file__)),
+        )
     b = (
-        SparkSession.builder.master(f"local[{cores}]")
+        SparkSession.builder.master(master or f"local[{cores}]")
         .config(
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -517,15 +517,32 @@ class PendingCommit:
         return self.version
 
 
+def recrawl_due(
+    seen: DataFrame, now_ms: int, ttl_days: int = SEEN_TTL_DAYS
+) -> DataFrame:
+    """Maintenance-side recrawl selection: url_seen rows whose
+    `seen_at_ms` is older than the TTL — the read-only twin of the
+    `maintain()` sweep (reference: entries expire from the 7-day
+    double cache and become crawlable again, CrawlerListener.java:
+    84-85, 96-108). Feeding these into a new crawl start reproduces
+    the reference's recrawl behavior; the filter is a pushed-down
+    scan predicate, no shuffle."""
+    cutoff = int(now_ms) - int(ttl_days) * 86_400_000
+    return seen.filter(F.col("seen_at_ms") < F.lit(cutoff)).select(
+        "crawl_id", "url_id", "seen_at_ms",
+        (F.lit(int(now_ms)) - F.col("seen_at_ms")).alias("age_ms"),
+    )
+
+
 def adaptive_recrawl(
     history: DataFrame, base_interval_ms: int = 86_400_000
 ) -> DataFrame:
     """Change-rate-adaptive recrawl scheduling (Cho & Garcia-Molina
     freshness model): URLs whose content changed on every fetch come
     due after `base_interval_ms`; URLs that never changed stretch the
-    interval by their observed fetch/change ratio. Extends a flat
-    7-day TTL sweep (the reference's only recrawl affordance) with
-    per-URL history.
+    interval by their observed fetch/change ratio. Extends the flat
+    7-day TTL sweep (`recrawl_due`, the reference's only recrawl
+    affordance) with per-URL history.
 
     `history` rows are (url_id, fetch_ts_ms, content_md5) — one per
     completed fetch. Returns (url_id, n_fetches, n_changes,
